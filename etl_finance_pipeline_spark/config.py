@@ -43,7 +43,6 @@ ALLOWED_COMPRESSIONS = {"zstd", "snappy", "gzip", "lz4", "none"}
 
 class ParquetConfig(BaseModel):
     compression: str = "zstd"
-    row_group_size: int = 65536
     partition_cols: list[str] = Field(default_factory=lambda: ["SYMBOL", "YEAR"])
     #: write outputs through the transactional commit-log table format
     #: (sources/table_format.py): atomic commits, snapshot-isolated
@@ -86,7 +85,7 @@ class ResampleConfig(BaseModel):
 
 
 class PerformanceConfig(BaseModel):
-    """Engine-side execution knobs (no reference counterpart — the
+    """Engine-side execution knob (no reference counterpart — the
     reference is single-threaded pandas and has nothing to tune).
 
     fuse_symbol_partitioning: hash-partition the input by SYMBOL once,
@@ -100,24 +99,9 @@ class PerformanceConfig(BaseModel):
     parallelism at the symbol count (one hot symbol = one hot partition
     — salting can't help here because window/dedupe semantics need the
     whole symbol together).
-
-    cache_normalized: persist the normalized+deduped frame
-    (MEMORY_AND_DISK) before fan-out. The pipeline runs ≥2 actions over
-    it (DQ report collect + one write/count per timeframe); without the
-    persist each action recomputes scan→normalize→dedupe. At 100 TB
-    prefer staging to parquet instead of cache if executors are
-    memory-tight; this knob covers the common case.
     """
 
     fuse_symbol_partitioning: bool = False
-    cache_normalized: bool = True
-    #: max per-timeframe output actions in flight at once. The
-    #: timeframe plans are independent jobs over the (cached)
-    #: normalized frame; running them sequentially leaves most of the
-    #: cluster idle during each plan's straggler tail (guide §2.6
-    #: "overlap independent jobs"). 2-3 in flight fills the tail
-    #: without executor contention; 1 restores strict sequencing.
-    overlap_timeframes: int = 3
 
 
 class PathsConfig(BaseModel):

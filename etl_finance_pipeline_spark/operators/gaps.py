@@ -260,13 +260,8 @@ def repair_gaps(
     gaps = detect_gaps(df, rule, key_cols, ts_col, short_gap_minutes)
     reindexed = reindex_to_grid(df, rule, key_cols, ts_col)
 
-    fill_count_exprs = []
     if use_ffill_for:
         present = [c for c in use_ffill_for if c in reindexed.columns]
-        fill_count_exprs = [
-            F.sum(F.col(c).isNull().cast("long")).alias(f"nulls_before_{c}")
-            for c in present
-        ]
         reindexed = forward_fill(reindexed, present, key_cols, ts_col)
 
     price_cols = [c for c in PRICE_COLUMNS if c in reindexed.columns]

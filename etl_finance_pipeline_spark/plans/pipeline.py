@@ -26,14 +26,18 @@ from __future__ import annotations
 
 import argparse
 import json
+import logging
 import os
+import threading
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from etl_finance_pipeline_spark.config import EngineConfig, load_config
+from etl_finance_pipeline_spark.functions.lanes import overlap
 from etl_finance_pipeline_spark.operators.gaps import repair_gaps
 from etl_finance_pipeline_spark.operators.normalize import normalize_df
 from etl_finance_pipeline_spark.operators.report import data_quality_report
@@ -129,12 +133,27 @@ def run_pipeline(
     result.reports["normalization"] = norm.report
     log.info("normalize: %s", norm.report)
     norm_df = norm.df.drop("_ingest_seq") if fuse else norm.df
-    if cfg.performance.cache_normalized:
-        # ≥2 actions read this frame (DQ collect + per-timeframe outputs);
-        # the persisted layout keeps the symbol partitioning, so cached
-        # reuse skips both the recompute AND the exchange.
-        norm_df = norm_df.persist(StorageLevel.MEMORY_AND_DISK)
+    # ≥2 actions read this frame (DQ collect + per-timeframe outputs);
+    # the persisted layout keeps the symbol partitioning, so cached
+    # reuse skips both the recompute AND the exchange.
+    norm_df = norm_df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        _fan_out(spark, cfg, norm_df, dry_run, result, log)
+    finally:
+        norm_df.unpersist()
+    return result
 
+
+def _fan_out(
+    spark: SparkSession,
+    cfg: EngineConfig,
+    norm_df: DataFrame,
+    dry_run: bool,
+    result: PipelineResult,
+    log: logging.Logger,
+) -> None:
+    """DQ report over the normalized frame, then one gap-repair →
+    resample → export plan per timeframe, the plans overlapped."""
     dq = data_quality_report(norm_df, ["SYMBOL"])
     result.reports["data_quality"] = [r.asDict() for r in dq.collect()]
     os.makedirs(cfg.paths.reports_path, exist_ok=True)
@@ -173,30 +192,23 @@ def run_pipeline(
             )
             plans.append((f"_{tf_label(tf)}", res))
 
-    # The per-timeframe plans are INDEPENDENT jobs over the same
-    # (cached) normalized frame: overlap them so the next plan's tasks
-    # back-fill executors freed by the current plan's straggler tail
-    # (guide §2.6). Each emit() returns its export-log entry instead of
-    # writing it, and entries are appended in PLAN order after the pool
-    # joins — the log file stays deterministic across runs regardless
-    # of completion order (reports/outputs were already order-stable).
-    # The DQ collect above already materialized the normalized cache,
-    # so concurrent first-use cannot duplicate the upstream compute.
-    # Job descriptions are thread-local only under PySpark pinned-
-    # thread mode (PYSPARK_PIN_THREAD, default on since Spark 3.2);
-    # without it the labels may leak across concurrent jobs — a
-    # cosmetic UI effect only.
-    from concurrent.futures import ThreadPoolExecutor
+    # The per-timeframe plans are INDEPENDENT jobs over the same cached
+    # normalized frame: overlap them so the next plan's tasks back-fill
+    # executors freed by the current plan's straggler tail.
+    # The DQ collect above already materialized the cache, so concurrent
+    # first-use cannot duplicate the upstream compute. Each lane runs
+    # under a copy of this thread's job group, so its own description
+    # labels only its own jobs. Each write is logged as soon as it
+    # commits, so a failed sibling cannot drop it from the audit trail.
+    log_lock = threading.Lock()
 
-    def emit(
-        suffix: str, frame: DataFrame
-    ) -> tuple[dict | None, str | None, dict | None]:
+    def emit(suffix: str, frame: DataFrame) -> tuple[dict | None, str | None]:
         out_path = os.path.join(cfg.paths.processed_path, f"candles{suffix}")
         spark.sparkContext.setJobDescription(f"pipeline: candles{suffix}")
         if dry_run:
             # full compute, no write — count() drives the plan
             n = frame.count()
-            return {"rows": n, "would_write": out_path}, None, None
+            return {"rows": n, "would_write": out_path}, None
         if cfg.parquet.transactional:
             # commit-log sink: same validation, then an atomic append —
             # a crashed run leaves no visible partial output and
@@ -228,35 +240,17 @@ def run_pipeline(
                 metadata={"timeframe": suffix.lstrip("_")},
             )
             log_entry = {"output": out_path, **report["validation"]}
+        with log_lock:
+            append_export_log(cfg.paths.logs_path, log_entry)
         log.info("export: wrote %s", out_path)
-        return None, out_path, log_entry
+        return None, out_path
 
-    width = max(1, int(cfg.performance.overlap_timeframes))
-    if width == 1 or len(plans) == 1:
-        emitted = [emit(suffix, frame) for suffix, frame in plans]
-    else:
-        with ThreadPoolExecutor(max_workers=min(width, len(plans))) as pool:
-            futures = [pool.submit(emit, s, f) for s, f in plans]
-            try:
-                emitted = [f.result() for f in futures]
-            except BaseException:
-                # one timeframe failed: stop dispatching the rest (in-
-                # flight siblings still finish — a non-transactional
-                # sink may leave their directories behind; the
-                # transactional sink leaves no visible partial output)
-                for f in futures:
-                    f.cancel()
-                raise
-    for (suffix, _), (dry_report, out_path, log_entry) in zip(plans, emitted):
+    emitted = overlap(*[partial(emit, s, f) for s, f in plans])
+    for (suffix, _), (dry_report, out_path) in zip(plans, emitted):
         if dry_report is not None:
             result.reports[f"dry_run{suffix}"] = dry_report
         if out_path is not None:
             result.outputs.append(out_path)
-        if log_entry is not None:
-            append_export_log(cfg.paths.logs_path, log_entry)
-    if cfg.performance.cache_normalized:
-        norm_df.unpersist()
-    return result
 
 
 def main(argv: list[str] | None = None) -> int:

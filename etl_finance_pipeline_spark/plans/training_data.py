@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_finance_pipeline_spark.functions.lanes import overlap
 from etl_finance_pipeline_spark.functions.scalar import portable_round as _pr
 from etl_finance_pipeline_spark.functions.text import LANG_PRIORITY, STOPWORDS
 from etl_finance_pipeline_spark.operators.dedup import (
@@ -2239,8 +2240,6 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver rounds that leave the cluster idle — materialize the
     # eval frames in a sibling thread while the trainings run. Each
     # lane computes exactly what it did serially.
-    from concurrent.futures import ThreadPoolExecutor
-
     def _eval_lanes():
         truth = (
             cosine_topk(emb, queries, k=5)
@@ -2263,11 +2262,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             encode_engine="numpy",
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_eval = pool.submit(_eval_lanes)
-        f_pq = pool.submit(_pq_lane)
-        truth, ivf = f_eval.result()
-        pq = f_pq.result()
+    (truth, ivf), pq = overlap(_eval_lanes, _pq_lane)
     outs = []
     for label, pred in (("ivf_flat", ivf), ("ivf_pq", pq)):
         p = pred.select("query_id", "neighbor_id", F.lit(1).alias("_p"))
@@ -2518,21 +2513,14 @@ def q_curation_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = minhash_lsh_pairs(docs).filter(F.col("est_jaccard") >= 0.5)
     # the CC label-propagation loop and the directive-page checkpoint
     # are both EAGER and independent — overlap them (r14, guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_comp = pool.submit(
-            lambda: connected_components(pairs).select(
-                F.col("id").alias("doc_id"), "component"
-            )
-        )
-        f_noai = pool.submit(
-            lambda: meta_robots(_directive_pages(spark, sf_dir)).select(
-                "doc_id", F.col("noai").alias("opted_out")
-            )
-        )
-        comp = f_comp.result()
-        noai = f_noai.result()
+    comp, noai = overlap(
+        lambda: connected_components(pairs).select(
+            F.col("id").alias("doc_id"), "component"
+        ),
+        lambda: meta_robots(_directive_pages(spark, sf_dir)).select(
+            "doc_id", F.col("noai").alias("opted_out")
+        ),
+    )
     flags = (
         gopher_rules(docs)
         .join(
@@ -4235,8 +4223,6 @@ def q_tokenizer_oov_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the two BPE trainings are independent driver-round loops —
     # overlap them (guide §2.6, same device as tokenizer_efficiency)
-    from concurrent.futures import ThreadPoolExecutor
-
     def _train(byte_level: bool):
         return [
             (r["left_sym"], r["right_sym"])
@@ -4247,13 +4233,11 @@ def q_tokenizer_oov_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()
         ]
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        trained = {
-            bl: pool.submit(_train, bl) for bl in (True, False)
-        }
+    trained = overlap(lambda: _train(True), lambda: _train(False))
     outs = []
-    for label, byte_level in (("bpe_bytes", True), ("bpe_chars", False)):
-        merges = trained[byte_level].result()
+    for (label, byte_level), merges in zip(
+        (("bpe_bytes", True), ("bpe_chars", False)), trained
+    ):
         enc = bpe_encode(hold, merges, byte_level=byte_level)
         tok = enc.select(F.explode("bpe_tokens").alias("sym"))
         if byte_level:
@@ -5127,20 +5111,14 @@ def q_substring_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # position explodes AND its span count (3 consumers) — without
     # the cut the seed-and-chain lane re-executes per consumer. The
     # two lanes are independent: overlap them (guide §2.6).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fc = pool.submit(
-            lambda: duplicate_token_spans(
-                docs, "doc_id", "text", k=8, min_count=2
-            ).localCheckpoint(eager=True)
-        )
-        fe = pool.submit(
-            lambda: suffix_dup_spans(
-                docs, "doc_id", "text", k=8
-            ).localCheckpoint(eager=True)
-        )
-        cover, exact = fc.result(), fe.result()
+    cover, exact = overlap(
+        lambda: duplicate_token_spans(
+            docs, "doc_id", "text", k=8, min_count=2
+        ).localCheckpoint(eager=True),
+        lambda: suffix_dup_spans(
+            docs, "doc_id", "text", k=8
+        ).localCheckpoint(eager=True),
+    )
     cpos = cover.select(
         "doc_id",
         F.explode(
@@ -7114,8 +7092,6 @@ def q_tokenizer_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pipeline's per-timeframe outputs). Each lane is deterministic
     # and touches only its own driver-side state, so results are
     # byte-identical to the sequential order.
-    from concurrent.futures import ThreadPoolExecutor
-
     def _bpe_lane():
         merges = [
             (r["left_sym"], r["right_sym"])
@@ -7154,12 +7130,7 @@ def q_tokenizer_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
             max_word_len=_UNI_W,
         ).select("doc_id", F.col("n_pieces").cast("long").alias("_t"))
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futures = [
-            pool.submit(lane)
-            for lane in (_bpe_lane, _bbpe_lane, _wp_lane, _uni_lane)
-        ]
-        bpe, bbpe, wp, uni = [f.result() for f in futures]
+    bpe, bbpe, wp, uni = overlap(_bpe_lane, _bbpe_lane, _wp_lane, _uni_lane)
 
     outs = []
     for name, enc, cap in (
@@ -8728,17 +8699,10 @@ def q_doremi_proxy_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lane is one corpus aggregate — materialize the (k-source) EG
     # frame in a sibling thread while the probe trains. Intra-query
     # only; both lanes compute exactly what they did serially.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_wa = pool.submit(
-            lambda: _doremi_eg(_doremi_src_loss(docs)).localCheckpoint(
-                eager=True
-            )
-        )
-        f_prob = pool.submit(q_fasttext_probe, spark, sf_dir)
-        wa = f_wa.result()
-        prob = f_prob.result()
+    wa, prob = overlap(
+        lambda: _doremi_eg(_doremi_src_loss(docs)).localCheckpoint(eager=True),
+        lambda: q_fasttext_probe(spark, sf_dir),
+    )
     d = F.col("fasttext_score") - F.col("label")
     sq = prob.select("doc_id", _pr(d * d, 6).alias("_e"))
     srcb = (
@@ -12702,26 +12666,16 @@ def q_crawl_maintain_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # directive-page frame, the crawl-page + anchor frames) that
     # previously serialized ~5 s of the query's ~7.5 s before the
     # readout job even started. The lanes are independent (each builds
-    # its own frames and touches no shared driver state), and every
-    # future is consumed in a fixed order, so the readout row is
+    # its own frames and touches no shared driver state), and overlap
+    # returns the results in argument order, so the readout row is
     # byte-identical.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_rp = pool.submit(
-            lambda: q_recrawl_priority(spark, sf_dir).localCheckpoint(
-                eager=True
-            )
-        )
-        f_rr = pool.submit(q_redirect_resolve, spark, sf_dir)
-        f_rv = pool.submit(q_revisit_census, spark, sf_dir)
-        f_ig = pool.submit(q_index_gate, spark, sf_dir)
-        f_fm = pool.submit(q_frontier_merge, spark, sf_dir)
-        rp = f_rp.result()
-        redirect = f_rr.result()
-        revisit = f_rv.result()
-        index_gate = f_ig.result()
-        frontier = f_fm.result()
+    rp, redirect, revisit, index_gate, frontier = overlap(
+        lambda: q_recrawl_priority(spark, sf_dir).localCheckpoint(eager=True),
+        lambda: q_redirect_resolve(spark, sf_dir),
+        lambda: q_revisit_census(spark, sf_dir),
+        lambda: q_index_gate(spark, sf_dir),
+        lambda: q_frontier_merge(spark, sf_dir),
+    )
 
     n_fetches = (
         load_table(spark, _t(sf_dir, "documents"))
@@ -16417,8 +16371,6 @@ def q_bitext_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full mining chain and the query benches ~3× its real cost. The
     # two miners are independent: overlap their materializations so
     # the IVF lane back-fills the brute lane's idle tail (guide §2.6).
-    from concurrent.futures import ThreadPoolExecutor
-
     def _brute():
         return (
             bitext_margin_mine(en, de, k=4, margin_threshold_ppm=1_050_000)
@@ -16435,9 +16387,7 @@ def q_bitext_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fb, fv = pool.submit(_brute), pool.submit(_ivf)
-        brute, ivf = fb.result(), fv.result()
+    brute, ivf = overlap(_brute, _ivf)
     common = brute.join(ivf, ["src_id", "tgt_id"]).count()
     nb = brute.count()
     nv = ivf.count()

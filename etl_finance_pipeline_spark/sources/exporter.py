@@ -8,8 +8,9 @@ Capability parity with /root/reference/src/etl/load/exporter.py
  * YEAR/MONTH partition columns derived with ``F.year``/``F.month``
    (exporter.py:94-125) → Hive-style partition pruning on read.
  * Content hash (exporter.py:76-91): sha256 over (row count, ts
-   min/max, head-3 of key columns) — one agg + a ``limit(3)`` collect,
-   O(1) driver data regardless of table size.
+   min/max, head-3 of key columns) — the count and span reuse the
+   validation row, so only a ``limit(3)`` collect is added: O(1)
+   driver data regardless of table size.
  * Writer knobs for the 100 TB path: zstd, ``maxRecordsPerFile`` to
    bound file sizes, optional sort-within-partitions for time-ordered
    row groups (better scan locality + min/max pruning).
@@ -27,9 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def validate_for_export(
-    df: DataFrame, ts_col: str = "TIMESTAMP", collect: bool = True
-) -> dict | DataFrame:
+def validate_for_export(df: DataFrame, ts_col: str = "TIMESTAMP") -> dict:
     """Export-time validation (P8/P9/A4/O3).
 
     Schema assertions raise; data sanity checks come back as one
@@ -64,10 +63,7 @@ def validate_for_export(
                 (F.col("HIGH") < F.greatest("OPEN", "LOW", "CLOSE")).cast("int")
             ).alias("high_below_max")
         )
-    rep = df.agg(*aggs)
-    if not collect:
-        return rep
-    row = rep.collect()[0].asDict()
+    row = df.agg(*aggs).collect()[0].asDict()
     row["start"] = str(row["start"])
     row["end"] = str(row["end"])
     return row
@@ -94,19 +90,19 @@ def derive_partition_columns(
     return df, resolved
 
 
-def content_hash(df: DataFrame, key_cols: list[str], ts_col: str = "TIMESTAMP") -> str:
+def content_hash(df: DataFrame, key_cols: list[str], validation: dict) -> str:
     """sha256 over (row count, ts min/max, head-3 of key columns) —
-    cheap change-detection fingerprint (S10, exporter.py:76-91)."""
-    stats = df.agg(
-        F.count("*").alias("n"), F.min(ts_col).alias("lo"), F.max(ts_col).alias("hi")
-    ).collect()[0]
+    cheap change-detection fingerprint (S10, exporter.py:76-91). The
+    count and span come from *validation*, the row
+    :func:`validate_for_export` already collected, so the hash itself
+    reads only the head."""
     present = [c for c in key_cols if c in df.columns]
     head = df.select(*present).limit(3).collect() if present else []
     payload = json.dumps(
         {
-            "rows": stats["n"],
-            "min": str(stats["lo"]),
-            "max": str(stats["hi"]),
+            "rows": validation["rows"],
+            "min": validation["start"],
+            "max": validation["end"],
             "head": [[str(v) for v in r] for r in head],
         },
         sort_keys=True,
@@ -151,7 +147,9 @@ def write_parquet_with_metadata(
             "path": out_path,
             "compression": compression,
             "partition_cols": resolved,
-            "content_hash": content_hash(df, [ts_col, "SYMBOL"], ts_col),
+            "content_hash": content_hash(
+                df, [ts_col, "SYMBOL"], report["validation"]
+            ),
             "exported_at": datetime.now(timezone.utc).isoformat(),
             "user_metadata": metadata or {},
         }

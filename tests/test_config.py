@@ -27,7 +27,8 @@ def test_yaml_load_with_env_expansion(tmp_path, monkeypatch):
     p = tmp_path / "cfg.yml"
     p.write_text(
         "paths:\n  raw_path: ${DATA_ROOT}/raw\n"
-        "parquet:\n  compression: snappy\n"
+        "parquet:\n  compression: snappy\n  row_group_size: 65536\n"
+        "performance:\n  cache_normalized: true\n  overlap_timeframes: 3\n"
         "schema:\n  columns_map:\n    open: [o, open]\n"
     )
     cfg = load_config(str(p))

@@ -248,6 +248,42 @@ def test_pipeline_transactional_sink(spark, tmp_path):
     assert '"table_version": 0' in log[0] and '"table_version": 1' in log[1]
 
 
+def test_run_pipeline_partial_failure_logs_committed_writes(
+    spark, tmp_path, monkeypatch
+):
+    """One timeframe's write fails: the error propagates, the export
+    log names exactly the outputs whose sidecars were written, and the
+    normalized frame's cache is released."""
+    from etl_finance_pipeline_spark.plans import pipeline
+
+    real_write = pipeline.write_parquet_with_metadata
+
+    def write_all_but_5m(df, out_path, **kwargs):
+        if out_path.endswith("candles_5m"):
+            raise RuntimeError("injected 5m write failure")
+        return real_write(df, out_path, **kwargs)
+
+    monkeypatch.setattr(pipeline, "write_parquet_with_metadata", write_all_but_5m)
+    _write_raw(tmp_path)
+    cached_before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="injected 5m"):
+        run_pipeline(spark, _cfg(tmp_path, ["1T", "5T", "15T"]), dry_run=False)
+
+    processed = tmp_path / "processed"
+    sidecars = {
+        str(processed / name[: -len(".meta.json")])
+        for name in os.listdir(processed)
+        if name.endswith(".meta.json")
+    }
+    log = (tmp_path / "logs" / "export_log.ndjson").read_text().splitlines()
+    logged = [json.loads(line)["output"] for line in log]
+    assert sorted(logged) == sorted(sidecars)
+    # the first lane starts before the failing one, so it always commits
+    assert str(processed / "candles_1m") in sidecars
+    assert str(processed / "candles_5m") not in sidecars
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached_before
+
+
 def test_rotating_logger(tmp_path):
     """Reference-parity ops logging (logger.py:11-27): console + size-
     rotated file handler, idempotent per name, no import side effects."""

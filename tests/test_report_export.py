@@ -122,8 +122,9 @@ def test_write_parquet_roundtrip(spark, tmp_path):
 
 
 def test_content_hash_changes_with_data(spark):
-    h1 = content_hash(_candles(spark, 5), ["SYMBOL"])
-    h2 = content_hash(_candles(spark, 6), ["SYMBOL"])
+    c5, c6 = _candles(spark, 5), _candles(spark, 6)
+    h1 = content_hash(c5, ["SYMBOL"], validate_for_export(c5))
+    h2 = content_hash(c6, ["SYMBOL"], validate_for_export(c6))
     assert h1 != h2 and len(h1) == 64
 
 
