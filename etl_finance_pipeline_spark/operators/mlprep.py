@@ -158,69 +158,69 @@ def linear_probe_train(
         F.col(vec_col).cast("array<double>").alias("_x"),
         F.col(label_col).cast("double").alias("_y"),
     )
-    # iters+1 actions read this frame — persist for the loop (and
-    # release before returning): without it every GD pass re-runs the
-    # upstream featurize/scan lineage. Spills to disk if it outgrows
-    # memory; callers that already checkpointed their input just get a
-    # cheap cached re-read.
-    from pyspark.storagelevel import StorageLevel
+    # iters+1 actions read this frame — persist for the loop and
+    # release it on every exit, the empty-input raise and a failed GD
+    # pass included: without it every GD pass re-runs the upstream
+    # featurize/scan lineage. Spills to disk if it outgrows memory;
+    # callers that already checkpointed their input just get a cheap
+    # cached re-read.
+    from etl_finance_pipeline_spark.functions.lanes import scoped_persist
 
-    src = src.persist(StorageLevel.MEMORY_AND_DISK)
-    # ONE action for (n, dim) instead of a first() plus a count() —
-    # each extra action re-runs the (often unmaterialized) featurize
-    # lineage upstream (r14, guide §1.2: fewer passes). min(size) ==
-    # the first row's size on well-formed input (all vectors share a
-    # dim); ragged input failed downstream before and still does.
-    row0 = src.agg(
-        F.count("*").alias("_n"), F.min(F.size("_x")).alias("_d")
-    ).first()
-    if row0 is None or row0["_d"] is None:
-        raise ValueError("linear_probe_train: empty input")
-    dim = row0["_d"]
-    n = row0["_n"]
-    scale = 10 ** round_digits
-    w = [0.0] * dim
-    b = 0.0
-    import math
+    with scoped_persist(src) as src:
+        # ONE action for (n, dim) instead of a first() plus a count() —
+        # each extra action re-runs the (often unmaterialized) featurize
+        # lineage upstream (r14, guide §1.2: fewer passes). min(size) ==
+        # the first row's size on well-formed input (all vectors share a
+        # dim); ragged input failed downstream before and still does.
+        row0 = src.agg(
+            F.count("*").alias("_n"), F.min(F.size("_x")).alias("_d")
+        ).first()
+        if row0 is None or row0["_d"] is None:
+            raise ValueError("linear_probe_train: empty input")
+        dim = row0["_d"]
+        n = row0["_n"]
+        scale = 10 ** round_digits
+        w = [0.0] * dim
+        b = 0.0
+        import math
 
-    spark = df.sparkSession
-    pred = (
-        F.aggregate(
-            F.zip_with(F.col("_x"), F.col("_w"), lambda x, wi: x * wi),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        + F.col("_b")
-    )
-    for _ in range(iters):
-        wdf = spark.createDataFrame(
-            [(list(map(float, w)), float(b))], "_w array<double>, _b double"
-        )
-        row = (
-            src.crossJoin(F.broadcast(wdf))
-            .select((pred - F.col("_y")).alias("_r"), "_x")
-            .groupBy()
-            .agg(
-                F.sum("_r").alias("_gb"),
-                *[
-                    F.sum(F.col("_r") * F.element_at("_x", j + 1)).alias(
-                        f"_g{j}"
-                    )
-                    for j in range(dim)
-                ],
+        spark = df.sparkSession
+        pred = (
+            F.aggregate(
+                F.zip_with(F.col("_x"), F.col("_w"), lambda x, wi: x * wi),
+                F.lit(0.0),
+                lambda acc, v: acc + v,
             )
-            .first()
+            + F.col("_b")
         )
-        w = [
-            math.floor(
-                (w[j] - lr * 2.0 / n * (row[f"_g{j}"] or 0.0)) * scale + 0.5
+        for _ in range(iters):
+            wdf = spark.createDataFrame(
+                [(list(map(float, w)), float(b))], "_w array<double>, _b double"
             )
-            / scale
-            for j in range(dim)
-        ]
-        b = math.floor((b - lr * 2.0 / n * row["_gb"]) * scale + 0.5) / scale
-    src.unpersist()
-    return w, b
+            row = (
+                src.crossJoin(F.broadcast(wdf))
+                .select((pred - F.col("_y")).alias("_r"), "_x")
+                .groupBy()
+                .agg(
+                    F.sum("_r").alias("_gb"),
+                    *[
+                        F.sum(F.col("_r") * F.element_at("_x", j + 1)).alias(
+                            f"_g{j}"
+                        )
+                        for j in range(dim)
+                    ],
+                )
+                .first()
+            )
+            w = [
+                math.floor(
+                    (w[j] - lr * 2.0 / n * (row[f"_g{j}"] or 0.0)) * scale + 0.5
+                )
+                / scale
+                for j in range(dim)
+            ]
+            b = math.floor((b - lr * 2.0 / n * row["_gb"]) * scale + 0.5) / scale
+        return w, b
 
 
 def bt_ratings(

@@ -107,15 +107,22 @@ def data_quality_report(
 
     *approx=False* (default) computes the EXACT median and distinct
     count — required for oracle parity, but the exact percentile is a
-    holistic aggregate (buffers all values per group). *approx=True*
-    is the 100 TB path: ``approx_percentile`` (mergeable t-digest-
-    style sketch) and HLL ``approx_count_distinct`` — fully map-side
-    combinable, constant memory per group.
+    holistic aggregate (buffers all values per group). The exact
+    distinct count is the size of the key's stamp set, not a distinct
+    aggregate: Catalyst plans ``count(DISTINCT)`` by first grouping on
+    (keys, stamp), which would give every stamp its own percentile
+    buffer; the set holds per-key values like the percentile beside it.
+    *approx=True* is the 100 TB path: ``approx_percentile`` (mergeable
+    t-digest-style sketch) and HLL ``approx_count_distinct`` — fully
+    map-side combinable, constant memory per group.
     """
     keys = key_cols or []
     cols = set(df.columns)
     distinct_ts = (
-        F.approx_count_distinct(ts_col) if approx else F.countDistinct(ts_col)
+        F.approx_count_distinct(ts_col)
+        if approx
+        # both sides skip NULL stamps, as countDistinct does
+        else F.size(F.collect_set(ts_col))
     )
     aggs = [
         F.count("*").alias("rows"),

@@ -836,8 +836,9 @@ def pq_train(
     )
     # dim from the seed rows — they are full vectors, so the separate
     # probe_vector_dim() action (one more pass over the input lineage)
-    # is redundant (r14, guide §1.2: fewer passes).
-    dim = len(list(seeds[0][0])) if seeds else None
+    # is redundant (r14, guide §1.2: fewer passes). A NULL first seed
+    # leaves dim unknown, so it reaches the same ValueError as no seeds.
+    dim = len(list(seeds[0][0])) if seeds and seeds[0][0] is not None else None
     if dim is None or dim % m != 0:
         raise ValueError(f"vector dim {dim} not divisible into {m} subspaces")
     subdim = dim // m

@@ -34,10 +34,9 @@ from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from etl_finance_pipeline_spark.config import EngineConfig, load_config
-from etl_finance_pipeline_spark.functions.lanes import overlap
+from etl_finance_pipeline_spark.functions.lanes import overlap, scoped_persist
 from etl_finance_pipeline_spark.operators.gaps import repair_gaps
 from etl_finance_pipeline_spark.operators.normalize import normalize_df
 from etl_finance_pipeline_spark.operators.report import data_quality_report
@@ -136,11 +135,8 @@ def run_pipeline(
     # ≥2 actions read this frame (DQ collect + per-timeframe outputs);
     # the persisted layout keeps the symbol partitioning, so cached
     # reuse skips both the recompute AND the exchange.
-    norm_df = norm_df.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    with scoped_persist(norm_df) as norm_df:
         _fan_out(spark, cfg, norm_df, dry_run, result, log)
-    finally:
-        norm_df.unpersist()
     return result
 
 
@@ -153,100 +149,100 @@ def _fan_out(
     log: logging.Logger,
 ) -> None:
     """DQ report over the normalized frame, then one gap-repair →
-    resample → export plan per timeframe, the plans overlapped."""
+    resample → export lane per timeframe, the lanes overlapped."""
     dq = data_quality_report(norm_df, ["SYMBOL"])
     result.reports["data_quality"] = [r.asDict() for r in dq.collect()]
     os.makedirs(cfg.paths.reports_path, exist_ok=True)
     with open(os.path.join(cfg.paths.reports_path, "dq_report.json"), "w") as fh:
         json.dump(result.reports["data_quality"], fh, indent=2, default=str)
 
-    timeframes = cfg.resample.timeframes or []
-    plans: list[tuple[str, DataFrame]] = []
-    if not timeframes:
-        # raw path: repair at hardcoded 1T, no resample (run.py:150-190)
+    def plan(tf: str | None) -> DataFrame:
+        # no timeframes: raw path, repair at hardcoded 1T and no
+        # resample (run.py:150-190); else repair AT the timeframe, then
+        # resample to it
         rep = repair_gaps(
             norm_df,
-            "1T",
+            tf or "1T",
             ["SYMBOL"],
             use_ffill_for=cfg.gaps.use_ffill_for,
             interpolate_prices=cfg.gaps.interpolate_prices,
             short_gap_minutes=cfg.gaps.short_gap_minutes,
         )
-        plans.append(("_raw", rep.df))
-    else:
-        for tf in timeframes:
-            rep = repair_gaps(
-                norm_df,
-                tf,
-                ["SYMBOL"],
-                use_ffill_for=cfg.gaps.use_ffill_for,
-                interpolate_prices=cfg.gaps.interpolate_prices,
-                short_gap_minutes=cfg.gaps.short_gap_minutes,
-            )
-            res = resample_ohlc(
-                rep.df,
-                tf,
-                ["SYMBOL"],
-                drop_incomplete=cfg.resample.drop_incomplete,
-                extra_numeric_policy=cfg.resample.extra_numeric_policy,
-            )
-            plans.append((f"_{tf_label(tf)}", res))
+        if tf is None:
+            return rep.df
+        return resample_ohlc(
+            rep.df,
+            tf,
+            ["SYMBOL"],
+            drop_incomplete=cfg.resample.drop_incomplete,
+            extra_numeric_policy=cfg.resample.extra_numeric_policy,
+        )
 
-    # The per-timeframe plans are INDEPENDENT jobs over the same cached
-    # normalized frame: overlap them so the next plan's tasks back-fill
-    # executors freed by the current plan's straggler tail.
-    # The DQ collect above already materialized the cache, so concurrent
-    # first-use cannot duplicate the upstream compute. Each lane runs
-    # under a copy of this thread's job group, so its own description
-    # labels only its own jobs. Each write is logged as soon as it
-    # commits, so a failed sibling cannot drop it from the audit trail.
+    # Each timeframe is an INDEPENDENT lane over the same cached
+    # normalized frame: it builds its own plan, so planning overlaps
+    # too, and the next lane's tasks back-fill executors freed by the
+    # current lane's straggler tail. The DQ collect above already
+    # materialized the cache, so concurrent first-use cannot duplicate
+    # the upstream compute. Each lane runs under a copy of this
+    # thread's job group, so its own description labels only its own
+    # jobs. Each write is logged as soon as it commits, so a failed
+    # sibling cannot drop it from the audit trail.
     log_lock = threading.Lock()
 
-    def emit(suffix: str, frame: DataFrame) -> tuple[dict | None, str | None]:
+    def emit(suffix: str, tf: str | None) -> tuple[dict | None, str | None]:
         out_path = os.path.join(cfg.paths.processed_path, f"candles{suffix}")
         spark.sparkContext.setJobDescription(f"pipeline: candles{suffix}")
+        frame = plan(tf)
         if dry_run:
             # full compute, no write — count() drives the plan
             n = frame.count()
             return {"rows": n, "would_write": out_path}, None
-        if cfg.parquet.transactional:
-            # commit-log sink: same validation, then an atomic append —
-            # a crashed run leaves no visible partial output and
-            # concurrent readers keep seeing the previous snapshot
-            from etl_finance_pipeline_spark.sources.exporter import (
-                derive_partition_columns,
-                validate_for_export,
-            )
-            from etl_finance_pipeline_spark.sources.table_format import write_table
+        # validation, write and content-hash head are three actions over
+        # this lane's output: persist it so the repair → resample chain
+        # runs once and the other two read the cache
+        with scoped_persist(frame) as frame:
+            if cfg.parquet.transactional:
+                # commit-log sink: same validation, then an atomic
+                # append — a crashed run leaves no visible partial output
+                # and concurrent readers keep seeing the previous snapshot
+                from etl_finance_pipeline_spark.sources.exporter import (
+                    derive_partition_columns,
+                    validate_for_export,
+                )
+                from etl_finance_pipeline_spark.sources.table_format import (
+                    write_table,
+                )
 
-            validation = validate_for_export(frame)
-            out_frame, resolved = derive_partition_columns(
-                frame, cfg.parquet.partition_cols
-            )
-            snap = write_table(
-                out_frame, out_path, mode="append", partition_by=resolved
-            )
-            log_entry = {
-                "output": out_path,
-                "table_version": snap.version,
-                **validation,
-            }
-        else:
-            report = write_parquet_with_metadata(
-                frame,
-                out_path,
-                compression=cfg.parquet.compression,
-                partition_cols=cfg.parquet.partition_cols,
-                metadata={"timeframe": suffix.lstrip("_")},
-            )
-            log_entry = {"output": out_path, **report["validation"]}
+                validation = validate_for_export(frame)
+                out_frame, resolved = derive_partition_columns(
+                    frame, cfg.parquet.partition_cols
+                )
+                snap = write_table(
+                    out_frame, out_path, mode="append", partition_by=resolved
+                )
+                log_entry = {
+                    "output": out_path,
+                    "table_version": snap.version,
+                    **validation,
+                }
+            else:
+                report = write_parquet_with_metadata(
+                    frame,
+                    out_path,
+                    compression=cfg.parquet.compression,
+                    partition_cols=cfg.parquet.partition_cols,
+                    metadata={"timeframe": suffix.lstrip("_")},
+                )
+                log_entry = {"output": out_path, **report["validation"]}
         with log_lock:
             append_export_log(cfg.paths.logs_path, log_entry)
         log.info("export: wrote %s", out_path)
         return None, out_path
 
-    emitted = overlap(*[partial(emit, s, f) for s, f in plans])
-    for (suffix, _), (dry_report, out_path) in zip(plans, emitted):
+    timeframes = cfg.resample.timeframes or []
+    lanes = [(f"_{tf_label(tf)}", tf) for tf in timeframes] or [("_raw", None)]
+    emitted = overlap(*[partial(emit, suffix, tf) for suffix, tf in lanes])
+    for (suffix, _), (dry_report, out_path) in zip(lanes, emitted):
         if dry_report is not None:
             result.reports[f"dry_run{suffix}"] = dry_report
         if out_path is not None:

@@ -1,5 +1,5 @@
 """functions/lanes.overlap: argument-order results, skip-on-failure, and
-lane jobs labelled with the caller's job group."""
+lane jobs labelled with the caller's job group and their own call site."""
 
 from __future__ import annotations
 
@@ -74,3 +74,22 @@ def test_lane_jobs_carry_the_callers_job_group(spark):
     assert counts == [10, 20, 30]
     assert len(tracker.getJobIdsForGroup("lanes-test")) >= 3
     assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+
+
+def test_lane_jobs_keep_their_call_site(spark):
+    """A lane job is named after the line that started it, not after
+    the lane wrapper."""
+    sc = spark.sparkContext
+    sc.setJobGroup("lanes-call-site", "overlap call site")
+    try:
+        (rows,) = overlap(lambda: spark.range(5).collect())
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(rows) == 5
+    store = sc._jsc.sc().statusStore()
+    names = [
+        store.job(j).name() for j in sc.statusTracker().getJobIdsForGroup("lanes-call-site")
+    ]
+    assert names and all("test_lanes.py" in n for n in names), names

@@ -284,6 +284,43 @@ def test_run_pipeline_partial_failure_logs_committed_writes(
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached_before
 
 
+def test_run_pipeline_caches_each_output_for_its_sink(spark, tmp_path, monkeypatch):
+    """A real run hands the sink a persisted frame, so validation, write
+    and head read one materialized result; a dry run counts every
+    timeframe without caching it; neither leaves a cached block."""
+    from etl_finance_pipeline_spark.plans import pipeline
+
+    real_write = pipeline.write_parquet_with_metadata
+    real_persist = pipeline.scoped_persist
+    seen_cached: list[bool] = []
+    persisted: list[object] = []
+
+    def spy_write(df, out_path, **kwargs):
+        seen_cached.append(df.is_cached)
+        return real_write(df, out_path, **kwargs)
+
+    def spy_persist(df):
+        persisted.append(df)
+        return real_persist(df)
+
+    monkeypatch.setattr(pipeline, "write_parquet_with_metadata", spy_write)
+    monkeypatch.setattr(pipeline, "scoped_persist", spy_persist)
+    _write_raw(tmp_path)
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    cached_before = rdds.size()
+
+    run_pipeline(spark, _cfg(tmp_path, ["1T", "5T"]), dry_run=False)
+    assert seen_cached == [True, True]
+    assert len(persisted) == 3  # the normalized frame + one per timeframe
+
+    persisted.clear()
+    res = run_pipeline(spark, _cfg(tmp_path, ["1T", "5T"]), dry_run=True)
+    assert seen_cached == [True, True]  # the dry run wrote nothing
+    assert len(persisted) == 1  # only the normalized frame
+    assert res.reports["dry_run_1m"]["rows"] == 6
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached_before
+
+
 def test_rotating_logger(tmp_path):
     """Reference-parity ops logging (logger.py:11-27): console + size-
     rotated file handler, idempotent per name, no import side effects."""

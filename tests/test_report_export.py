@@ -188,6 +188,38 @@ def test_partition_pruning_on_export_output(spark, tmp_path):
     assert back.count() == 10
 
 
+def test_dq_exact_duplicate_timestamps_without_distinct_aggregate(spark):
+    """Exact-mode duplicate_timestamps is count() − nunique() of the
+    stamps per symbol (NULL stamps count in neither), and the plan holds
+    no distinct aggregate."""
+    t0 = datetime(2024, 1, 2, 9, 0)
+    stamps = {
+        "A": [t0, t0, t0 + timedelta(minutes=1), None, None],
+        "B": [t0, t0 + timedelta(minutes=1), t0 + timedelta(minutes=2)],
+        "C": [None, t0, t0],
+    }
+    rows = [
+        (sym, ts, 1.0 + i, 2.0 + i, 0.5 + i, 1.5 + i, 10.0)
+        for sym, series in stamps.items()
+        for i, ts in enumerate(series)
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "SYMBOL string, TIMESTAMP timestamp, OPEN double, HIGH double, "
+        "LOW double, CLOSE double, VOLUME double",
+    )
+    rep = data_quality_report(df, ["SYMBOL"])
+    got = {r["SYMBOL"]: r["duplicate_timestamps"] for r in rep.collect()}
+    pdf = pd.DataFrame(
+        [(sym, ts) for sym, series in stamps.items() for ts in series],
+        columns=["SYMBOL", "TIMESTAMP"],
+    )
+    g = pdf.groupby("SYMBOL")["TIMESTAMP"]
+    assert got == (g.count() - g.nunique()).to_dict() == {"A": 1, "B": 0, "C": 1}
+    plan = rep._jdf.queryExecution().executedPlan().toString().lower()
+    assert "count(distinct" not in plan
+
+
 def test_dq_report_approx_mode(spark):
     exact = data_quality_report(
         _candles(spark, 50), ["SYMBOL"], compute_indicators=False

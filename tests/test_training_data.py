@@ -832,6 +832,24 @@ def test_pq_encode_lanes_agree(spark):
     assert jvm == np_lane
 
 
+def test_pq_train_null_first_seed_raises_value_error(spark):
+    """A NULL vector in the first seed slot is malformed input: it
+    reaches pq_train's documented ValueError, not a TypeError."""
+    from etl_finance_pipeline_spark.functions.scalar import portable_hash64
+    from etl_finance_pipeline_spark.operators.similarity import pq_train
+
+    ids = spark.createDataFrame([(i,) for i in range(4)], "vec_id long")
+    first = (
+        ids.withColumn("_h", portable_hash64(F.col("vec_id").cast("string")))
+        .orderBy("_h", "vec_id")
+        .first()["vec_id"]
+    )
+    rows = [(i, None if i == first else [float(i)] * 4) for i in range(4)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="not divisible"):
+        pq_train(df, m=2, ksub=2, iters=1)
+
+
 def test_incremental_duplicate_spans_semantics(spark):
     """Union semantics: a batch span duplicates if its grams exist in
     the corpus (once is enough) OR repeat within the batch; corpus
@@ -884,6 +902,19 @@ def test_linear_probe_learns_planted_relation(spark):
     scored = linear_probe_score(df, w, b)
     err = scored.selectExpr("max(abs(probe_score - label)) AS e").first()["e"]
     assert err < 0.1
+
+
+def test_linear_probe_empty_input_raises_and_releases_cache(spark):
+    """Empty input raises the documented ValueError and leaves no
+    cached block behind."""
+    from etl_finance_pipeline_spark.operators.mlprep import linear_probe_train
+
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keySet())
+    df = spark.createDataFrame([], "vec_id long, embedding array<double>, label double")
+    with pytest.raises(ValueError, match="empty input"):
+        linear_probe_train(df, iters=2)
+    assert set(sc._jsc.getPersistentRDDs().keySet()) == before
 
 
 def test_char_entropy_bounds_and_known_values(spark):
