@@ -24,8 +24,6 @@ last-committed-version dedupe = exactly-once state.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -33,7 +31,7 @@ from etl_finance_pipeline_spark.sources.table_format import (
     Snapshot,
     VacuumedRangeError,
     _list_versions,
-    _manifest_path,
+    _read_manifest,
     read_changes,
     read_table,
     snapshot,
@@ -44,12 +42,8 @@ from etl_finance_pipeline_spark.sources.table_format import (
 def aggregate_state_version(state_table: str) -> int | None:
     """The base-table version the materialized state currently
     reflects (its refresh high-water mark), or None if no state."""
-    versions = _list_versions(state_table)
-    if not versions:
-        return None
-    for v in reversed(versions):
-        with open(_manifest_path(state_table, v)) as fh:
-            m = json.load(fh)
+    for v in reversed(_list_versions(state_table)):
+        m = _read_manifest(state_table, v)
         if m.get("base_version") is not None:
             return int(m["base_version"])
     return None
@@ -217,8 +211,8 @@ def refresh_authority(
         return _rerank()
     # O(changed files): the feed plans only commits past the mark
     n_delta = changes.count()
-    with open(_manifest_path(state_table, snapshot(state_table).version)) as fh:
-        n_ranked = int(json.load(fh).get("n_edges", 0) or 0)
+    latest = _read_manifest(state_table, _list_versions(state_table)[-1])
+    n_ranked = int(latest.get("n_edges", 0) or 0)
     if n_ranked > 0 and n_delta / n_ranked <= edge_delta_threshold:
         return None  # carry the standing rank; mark stays at `seen`
     return _rerank()

@@ -57,16 +57,25 @@ import time
 import re
 import uuid
 from dataclasses import dataclass
-from datetime import datetime, timezone
+from datetime import date, datetime, timezone, tzinfo
+from zoneinfo import ZoneInfo
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+from pyspark.sql.types import DateType, IntegerType, StringType, StructField, StructType
+from pyspark.sql.types import TimestampNTZType, TimestampType
 
 _LOG_DIR = "_log"
 _DATA_DIR = "data"
 _VERSION_DIGITS = 20
 _CHECKPOINT_INTERVAL = 10
+_MAX_RETRIES = 5
+# one stats bound of each time type: _like coerces a value to its type
+_TIME_BOUNDS = {
+    TimestampType: datetime(1970, 1, 1, tzinfo=timezone.utc),
+    TimestampNTZType: datetime(1970, 1, 1),
+    DateType: date(1970, 1, 1),
+}
 
 
 class CommitConflict(RuntimeError):
@@ -123,18 +132,16 @@ def _manifest_path(table: str, version: int) -> str:
     return os.path.join(_log_path(table), f"{version:0{_VERSION_DIGITS}d}.json")
 
 
-def _list_versions(table: str) -> list[int]:
+def _list_log(table: str, suffix: str) -> list[int]:
+    """Sorted version numbers of the ``<version><suffix>`` log files."""
     logdir = _log_path(table)
-    if not os.path.isdir(logdir):
-        return []
-    out = []
-    for name in os.listdir(logdir):
-        if name.endswith(".json"):
-            try:
-                out.append(int(name[: -len(".json")]))
-            except ValueError:
-                continue
-    return sorted(out)
+    names = os.listdir(logdir) if os.path.isdir(logdir) else []
+    stems = [n[: -len(suffix)] for n in names if n.endswith(suffix)]
+    return sorted(int(v) for v in stems if v.isdigit())
+
+
+def _list_versions(table: str) -> list[int]:
+    return _list_log(table, ".json")
 
 
 def _checkpoint_path(table: str, version: int) -> str:
@@ -144,18 +151,29 @@ def _checkpoint_path(table: str, version: int) -> str:
 
 
 def _list_checkpoints(table: str) -> list[int]:
-    logdir = _log_path(table)
-    if not os.path.isdir(logdir):
-        return []
-    out = []
-    suffix = ".checkpoint.json"
-    for name in os.listdir(logdir):
-        if name.endswith(suffix):
-            try:
-                out.append(int(name[: -len(suffix)]))
-            except ValueError:
-                continue
-    return sorted(out)
+    return _list_log(table, ".checkpoint.json")
+
+
+def _read_manifest(table: str, version: int) -> dict:
+    """The commit manifest of *version* — the one place a log file is
+    opened (checkpoints aside)."""
+    with open(_manifest_path(table, version)) as fh:
+        return json.load(fh)
+
+
+def _replay(table: str, versions: list[int], version: int) -> tuple[dict, list[dict]]:
+    """The newest checkpoint at or before *version* (``{}`` if none)
+    and the manifests after it up to *version*, oldest first: what
+    ``snapshot()`` and ``_epoch_marks()`` fold over. O(_CHECKPOINT_INTERVAL)
+    manifest reads however long the log is; a missing checkpoint only
+    means a longer replay."""
+    usable = [cp for cp in _list_checkpoints(table) if cp <= version]
+    ckpt: dict = {}
+    if usable:
+        with open(_checkpoint_path(table, usable[-1])) as fh:
+            ckpt = json.load(fh)
+    start = usable[-1] + 1 if usable else 0
+    return ckpt, [_read_manifest(table, v) for v in versions if start <= v <= version]
 
 
 def _maybe_checkpoint(table: str, snap: Snapshot) -> None:
@@ -203,27 +221,14 @@ def _epoch_marks(table: str, version: int | None = None) -> dict[str, int]:
     versions = _list_versions(table)
     if not versions:
         return {}
-    if version is None:
-        version = versions[-1]
+    ckpt, manifests = _replay(table, versions, versions[-1] if version is None else version)
     marks: dict[str, int] = {}
-    replay_from = 0
-    usable = [cp for cp in _list_checkpoints(table) if cp <= version]
-    if usable:
-        with open(_checkpoint_path(table, usable[-1])) as fh:
-            ckpt = json.load(fh)
-        raw = ckpt.get("max_source_batch_ids")
-        if raw is not None:
-            marks = {str(k): int(v) for k, v in raw.items()}
-        else:  # checkpoint from before per-app marks
-            b = ckpt.get("max_source_batch_id")
-            if b is not None:
-                marks[""] = int(b)
-        replay_from = usable[-1] + 1
-    for v in versions:
-        if v < replay_from or v > version:
-            continue
-        with open(_manifest_path(table, v)) as fh:
-            m = json.load(fh)
+    raw = ckpt.get("max_source_batch_ids")
+    if raw is not None:
+        marks = {str(k): int(v) for k, v in raw.items()}
+    elif ckpt.get("max_source_batch_id") is not None:  # pre-per-app checkpoint
+        marks[""] = int(ckpt["max_source_batch_id"])
+    for m in manifests:
         b = m.get("source_batch_id")
         if b is None:
             continue
@@ -423,12 +428,66 @@ def _try_commit(table: str, version: int, manifest: dict) -> None:
         os.unlink(tmp)
 
 
+def _commit(
+    table: str,
+    action: str,
+    commit_id: str,
+    files: list[dict],
+    schema: StructType | None,
+    partition_by: list[str] | None,
+    extra: dict | None = None,
+    removed: list[dict] | None = None,
+    read: Snapshot | None = None,
+    overlap_preds: list[tuple] | None = None,
+    conflict: str = "",
+) -> Snapshot:
+    """The one optimistic-commit loop: claim the next version with a
+    manifest listing staged *files* (plus *extra* keys), then return
+    the committed snapshot. On :class:`CommitConflict` an append or
+    overwrite simply retries at the next version. A replace (*removed*
+    given: the live files it rewrote out of snapshot *read*) retries
+    only while :func:`_conflict_retry_safe` holds, and otherwise raises
+    *conflict* — re-claiming with stale file lists would resurrect
+    rows a concurrent commit dropped. Gives up after ``_MAX_RETRIES``."""
+    for _ in range(_MAX_RETRIES):
+        versions = _list_versions(table)
+        version = (versions[-1] + 1) if versions else 0
+        # an append's schema merge must run INSIDE the retry loop: on
+        # conflict the winning commit may itself have evolved the schema
+        commit_schema = schema
+        if action == "append" and versions:
+            prior = snapshot(table, versions[-1]).schema
+            if prior is not None:
+                commit_schema = _merge_schemas(prior, schema)
+        manifest = {
+            "version": version,
+            "action": action,
+            "commit_id": commit_id,
+            **({"removed": [f["path"] for f in removed]} if removed is not None else {}),
+            "files": files,
+            "schema": commit_schema.simpleString() if commit_schema else None,
+            "schema_json": commit_schema.json() if commit_schema else None,
+            "partition_by": partition_by or [],
+            "committed_at": datetime.now(timezone.utc).isoformat(),
+            **(extra or {}),
+        }
+        try:
+            _try_commit(table, version, manifest)
+        except CommitConflict:
+            if removed is None or _conflict_retry_safe(table, read, removed, overlap_preds):
+                continue
+            raise CommitConflict(conflict) from None
+        snap = snapshot(table, version)
+        _maybe_checkpoint(table, snap)
+        return snap
+    raise CommitConflict(f"gave up after {_MAX_RETRIES} retries on {table}")
+
+
 def write_table(
     df: DataFrame,
     table: str,
     mode: str = "append",
     partition_by: list[str] | None = None,
-    max_retries: int = 5,
     extra_metadata: dict | None = None,
     cluster_by: list[str] | None = None,
     zorder_by: list[str] | None = None,
@@ -510,38 +569,13 @@ def write_table(
             raise ExpectationViolation(
                 {k: v for k, v in violation_counts.items() if v}
             )
-    for _ in range(max_retries):
-        versions = _list_versions(table)
-        version = (versions[-1] + 1) if versions else 0
-        # schema check must run INSIDE the retry loop: on conflict the
-        # winning commit may itself have evolved the schema
-        schema = df.schema
-        if mode == "append" and versions:
-            prior = snapshot(table, versions[-1]).schema
-            if prior is not None:
-                schema = _merge_schemas(prior, df.schema)
-        manifest = {
-            "version": version,
-            "action": mode,
-            "commit_id": commit_id,
-            "files": entries,
-            "schema": schema.simpleString(),
-            "schema_json": schema.json(),
-            "partition_by": partition_by or [],
-            "committed_at": datetime.now(timezone.utc).isoformat(),
-            **(
-                {"expectations": violation_counts} if violation_counts or expectations else {}
-            ),
+    return _commit(
+        table, mode, commit_id, entries, df.schema, partition_by,
+        extra={
+            **({"expectations": violation_counts} if violation_counts or expectations else {}),
             **(extra_metadata or {}),
-        }
-        try:
-            _try_commit(table, version, manifest)
-            snap = snapshot(table, version)
-            _maybe_checkpoint(table, snap)
-            return snap
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"gave up after {max_retries} retries on {table}")
+        },
+    )
 
 
 def snapshot(table: str, version: int | None = None) -> Snapshot:
@@ -550,7 +584,11 @@ def snapshot(table: str, version: int | None = None) -> Snapshot:
     suffix after it — O(_CHECKPOINT_INTERVAL) reads regardless of
     total log length. Time travel to pre-checkpoint versions uses the
     closest older checkpoint (or a full replay for the earliest ones);
-    correctness never depends on a checkpoint existing."""
+    correctness never depends on a checkpoint existing.
+
+    TIMESTAMP and DATE stats bounds, which manifests store as strings
+    (``json.dump(default=str)``), come back as ``datetime``/``date`` —
+    typed by the schema the log records — so they compare as times."""
     versions = _list_versions(table)
     if not versions:
         raise FileNotFoundError(f"no table at {table}")
@@ -558,25 +596,10 @@ def snapshot(table: str, version: int | None = None) -> Snapshot:
         version = versions[-1]
     elif version not in versions:
         raise ValueError(f"version {version} not in {table} (have {versions})")
-    files: list[dict] = []
-    schema_ddl = None
-    schema_json = None
-    replay_from = 0
-    usable = [cp for cp in _list_checkpoints(table) if cp <= version]
-    if usable:
-        with open(_checkpoint_path(table, usable[-1])) as fh:
-            ckpt = json.load(fh)
-        files = list(ckpt["files"])
-        schema_ddl = ckpt.get("schema")
-        schema_json = ckpt.get("schema_json")
-        replay_from = usable[-1] + 1
-    for v in versions:
-        if v < replay_from:
-            continue
-        if v > version:
-            break
-        with open(_manifest_path(table, v)) as fh:
-            manifest = json.load(fh)
+    ckpt, manifests = _replay(table, versions, version)
+    files: list[dict] = list(ckpt.get("files", []))
+    schema_ddl, schema_json = ckpt.get("schema"), ckpt.get("schema_json")
+    for manifest in manifests:
         if manifest["action"] == "overwrite":
             files = []
         elif manifest["action"] == "replace":
@@ -585,9 +608,55 @@ def snapshot(table: str, version: int | None = None) -> Snapshot:
         files.extend(manifest["files"])
         schema_ddl = manifest.get("schema") or schema_ddl
         schema_json = manifest.get("schema_json") or schema_json
-    return Snapshot(
-        version=version, files=files, schema_ddl=schema_ddl, schema_json=schema_json
-    )
+    snap = Snapshot(version, files, schema_ddl, schema_json)
+    bounds = {
+        f.name: _TIME_BOUNDS[type(f.dataType)]
+        for f in (snap.schema.fields if snap.schema else [])
+        if type(f.dataType) in _TIME_BOUNDS
+    }
+    for f in files:
+        stats = f.get("stats") or {}
+        for col in bounds.keys() & stats.keys():
+            stats[col] = [_like(v, bounds[col], timezone.utc) for v in stats[col]]
+    return snap
+
+
+def _session_tz(spark: SparkSession | None = None) -> ZoneInfo:
+    spark = spark or SparkSession.getActiveSession()
+    return ZoneInfo(spark.conf.get("spark.sql.session.timeZone") if spark else "UTC")
+
+
+def _like(value, bound, tz: tzinfo | None = None):
+    """*value* coerced to the type of the stats *bound* it is compared
+    with: a ``datetime`` (aware for TIMESTAMP, naive for TIMESTAMP_NTZ)
+    or a ``date``; anything else passes through. A naive ISO-8601
+    string (``T`` or space separator) is read in *tz* (default: the
+    active session's time zone), as ``CAST(… AS TIMESTAMP)`` reads it;
+    a naive ``datetime`` is local time, as ``collect()`` returns it. On
+    a DATE bound a time of day is dropped, as ``CAST(… AS DATE)`` drops
+    it."""
+    if isinstance(bound, datetime):
+        if isinstance(value, datetime):
+            if bound.tzinfo is not None and value.tzinfo is None:
+                return value.astimezone()
+            return value
+        if isinstance(value, str):
+            value = datetime.fromisoformat(value)
+            if bound.tzinfo is not None and value.tzinfo is None:
+                value = value.replace(tzinfo=tz or _session_tz())
+        return value
+    if isinstance(bound, date) and isinstance(value, (str, datetime)):
+        return date.fromisoformat(str(value)[:10])
+    return value
+
+
+def _typed_predicates(spark: SparkSession, snap: Snapshot, predicates: list[tuple]) -> list[tuple]:
+    """*predicates* with each value coerced once, by its column's type
+    in *snap*'s schema, to what that column's stats bounds decode to —
+    so per-file matching never has to look up the session time zone."""
+    types = {f.name: type(f.dataType) for f in snap.schema.fields} if snap.schema else {}
+    tz = _session_tz(spark)
+    return [(c, op, _like(v, _TIME_BOUNDS.get(types.get(c)), tz)) for c, op, v in predicates]
 
 
 def _stats_match(stats: dict[str, list], predicates: list[tuple]) -> bool:
@@ -598,6 +667,7 @@ def _stats_match(stats: dict[str, list], predicates: list[tuple]) -> bool:
         if not rng:
             continue
         mn, mx = rng
+        value = _like(value, mn)
         if (
             (op == ">=" and mx < value)
             or (op == ">" and mx <= value)
@@ -624,23 +694,22 @@ def read_table(
     queryable columns.
 
     *stats_filter* skips files by footer min/max on NON-partition
-    columns: ``[("ts", ">=", "2024-01-02"), ("CLOSE", "<", 2.0)]``
+    columns: ``[("ts", ">=", "2024-01-02T09:30"), ("CLOSE", "<", 2.0)]``
     drops every file whose recorded [min, max] cannot intersect the
-    predicate (files without stats for the column are kept). Pass
-    numbers for numeric columns and ISO strings for timestamps (stats
-    are JSON-serialized; ISO strings compare lexicographically). This
-    prunes I/O only — apply the same predicate in the query for
-    row-level filtering."""
+    predicate (files without stats for the column are kept). Timestamp
+    and date bounds compare as times, not text: pass a ``datetime``
+    or an ISO-8601 string (``T`` or space separator); a
+    naive string is read in the session time zone, as ``CAST(… AS
+    TIMESTAMP)`` reads it, and a naive ``datetime`` as local time, as
+    ``collect()`` returns it. This prunes I/O only — apply the same
+    predicate in the query for row-level filtering."""
     snap = snapshot(table, version)
     files = snap.files
     if partition_filter:
-        files = [
-            f
-            for f in files
-            if all(f["partition_values"].get(k) == str(v) for k, v in partition_filter.items())
-        ]
+        files = [f for f in files if _in_partition(f, partition_filter)]
     if stats_filter:
-        files = [f for f in files if _stats_match(f.get("stats") or {}, stats_filter)]
+        preds = _typed_predicates(spark, snap, stats_filter)
+        files = [f for f in files if _stats_match(f.get("stats") or {}, preds)]
     if not files:
         empty_schema = snap.schema or snap.schema_ddl or "dummy string"
         return spark.createDataFrame([], empty_schema)
@@ -654,6 +723,25 @@ def read_table(
         cols += [c for c in out.columns if c not in cols]
         out = out.select(*cols)
     return out
+
+
+def _in_partition(f: dict, partition_filter: dict[str, str]) -> bool:
+    """Does manifest entry *f* lie in the hive partition *partition_filter* names?"""
+    return all(
+        f.get("partition_values", {}).get(k) == str(v) for k, v in partition_filter.items()
+    )
+
+
+def _hive_layout(df: DataFrame, files: list[dict], also: tuple[str, ...] = ()) -> list[str]:
+    """The hive layout a rewrite of *files* keeps: every key in their
+    ``partition_values`` (first-seen order), then *also*. A rewrite
+    staged without it would leave files with no partition values, which
+    ``read_table(partition_filter=…)`` silently drops."""
+    keys = list(dict.fromkeys([k for f in files for k in f.get("partition_values", {})] + [*also]))
+    for k in keys:
+        if k not in df.columns:
+            raise ValueError(f"partition column {k!r} not in data")
+    return keys
 
 
 def _infer_partition_type(values: list[str]) -> str:
@@ -701,7 +789,8 @@ def _read_files(
         ext = F.regexp_extract(F.input_file_name(), re.escape(k) + "=([^/]+)", 1)
         if k in out.columns:
             # some files carry k as a data column (unpartitioned
-            # rewrites from merge/delete), others only in the path
+            # commits, and merge/delete rewrites written before those
+            # kept the hive layout), others only in the path
             col = F.when(ext != "", ext).otherwise(F.col(k).cast("string"))
         else:
             col = F.when(ext != "", ext)
@@ -741,7 +830,6 @@ def merge_table(
     table: str,
     source: DataFrame,
     key_cols: list[str],
-    max_retries: int = 5,
     extra_metadata: dict | None = None,
 ) -> Snapshot:
     """MERGE (upsert) *source* into *table* on *key_cols*: matching
@@ -752,10 +840,10 @@ def merge_table(
     ``replace`` commit (removed + added file lists). On a clustered
     table a point-key merge rewrites one file, not 100 TB.
 
-    Rewrite = (overlapping files ∖ source keys by left_anti) ∪ source.
-    Missing stats on a key column ⇒ the file is conservatively
-    rewritten. Data files are immutable; time travel to pre-merge
-    versions is unaffected.
+    Rewrite = (overlapping files ∖ source keys by left_anti) ∪ source,
+    staged under the table's hive layout. Missing stats on a key column
+    ⇒ the file is conservatively rewritten. Data files are immutable;
+    time travel to pre-merge versions is unaffected.
     """
     snap = snapshot(table)
     # key range of the source (driver-side: one tiny agg)
@@ -763,10 +851,9 @@ def merge_table(
         *[expr for c in key_cols for expr in (
             F.min(c).alias(f"_mn_{c}"), F.max(c).alias(f"_mx_{c}"))]
     ).collect()[0]
-    preds = []
-    for c in key_cols:
-        preds.append((c, ">=", bounds[f"_mn_{c}"]))
-        preds.append((c, "<=", bounds[f"_mx_{c}"]))
+    preds = _typed_predicates(spark, snap, [
+        (c, op, bounds[f"_{m}_{c}"]) for c in key_cols for op, m in ((">=", "mn"), ("<=", "mx"))
+    ])
     overlapping = [f for f in snap.files if _stats_match(f.get("stats") or {}, preds)]
 
     if overlapping:
@@ -775,36 +862,15 @@ def merge_table(
         rewrite = keep.unionByName(source, allowMissingColumns=True)
     else:
         rewrite = source
-    entries, commit_id = _stage_files(rewrite, table, None)
-    for _ in range(max_retries):
-        versions = _list_versions(table)
-        version = (versions[-1] + 1) if versions else 0
-        manifest = {
-            "version": version,
-            "action": "replace",
-            "commit_id": commit_id,
-            "removed": [f["path"] for f in overlapping],
-            "files": entries,
-            "schema": rewrite.schema.simpleString(),
-            "schema_json": rewrite.schema.json(),
-            "partition_by": [],
-            "committed_at": datetime.now(timezone.utc).isoformat(),
-            "merge_keys": key_cols,
-            **(extra_metadata or {}),
-        }
-        try:
-            _try_commit(table, version, manifest)
-            snap = snapshot(table, version)
-            _maybe_checkpoint(table, snap)
-            return snap
-        except CommitConflict:
-            if not _conflict_retry_safe(table, snap, overlapping, preds):
-                raise CommitConflict(
-                    f"concurrent commit on {table} touched data this merge "
-                    "read; re-run merge_table against the new snapshot"
-                ) from None
-            continue
-    raise CommitConflict(f"gave up after {max_retries} retries on {table}")
+    partition_by = _hive_layout(rewrite, snap.files)
+    entries, commit_id = _stage_files(rewrite, table, partition_by)
+    return _commit(
+        table, "replace", commit_id, entries, rewrite.schema, partition_by,
+        extra={"merge_keys": key_cols, **(extra_metadata or {})},
+        removed=overlapping, read=snap, overlap_preds=preds,
+        conflict=f"concurrent commit on {table} touched data this merge "
+        "read; re-run merge_table against the new snapshot",
+    )
 
 
 def delete_where(
@@ -812,54 +878,33 @@ def delete_where(
     table: str,
     condition: str,
     stats_pruning: list[tuple] | None = None,
-    max_retries: int = 5,
 ) -> Snapshot:
     """DELETE rows matching *condition* (a Spark SQL predicate).
     *stats_pruning* (same shape as ``read_table(stats_filter=…)``,
     describing where matching rows CAN live) limits the rewrite to
-    overlapping files; without it every file is rewritten. Files whose
-    rewrite keeps all rows could be skipped too — left simple here.
-    History stays time-travelable."""
+    overlapping files; without it every file is rewritten, under the
+    table's hive layout. Files whose rewrite keeps all rows could be
+    skipped too — left simple here. History stays time-travelable.
+
+    Concurrent appends serialize fine (our delete first, the append
+    after); a concurrent rewrite of a file we remove does not — the
+    delete aborts instead of resurrecting its old bytes."""
     snap = snapshot(table)
+    touched = list(snap.files)
     if stats_pruning:
-        touched = [f for f in snap.files if _stats_match(f.get("stats") or {}, stats_pruning)]
-    else:
-        touched = list(snap.files)
+        preds = _typed_predicates(spark, snap, stats_pruning)
+        touched = [f for f in touched if _stats_match(f.get("stats") or {}, preds)]
     if not touched:
         return snap
     kept = _read_files(spark, table, touched, snap.schema).filter(f"NOT ({condition})")
-    entries, commit_id = _stage_files(kept, table, None)
-    for _ in range(max_retries):
-        versions = _list_versions(table)
-        version = (versions[-1] + 1) if versions else 0
-        manifest = {
-            "version": version,
-            "action": "replace",
-            "commit_id": commit_id,
-            "removed": [f["path"] for f in touched],
-            "files": entries,
-            "schema": kept.schema.simpleString(),
-            "schema_json": kept.schema.json(),
-            "partition_by": [],
-            "committed_at": datetime.now(timezone.utc).isoformat(),
-            "delete_condition": condition,
-        }
-        try:
-            _try_commit(table, version, manifest)
-            snap = snapshot(table, version)
-            _maybe_checkpoint(table, snap)
-            return snap
-        except CommitConflict:
-            # Concurrent appends serialize fine (our delete first, the
-            # append after); a concurrent rewrite of a file we remove
-            # does not — abort instead of resurrecting its old bytes.
-            if not _conflict_retry_safe(table, snap, touched):
-                raise CommitConflict(
-                    f"concurrent commit on {table} rewrote data this delete "
-                    "read; re-run delete_where against the new snapshot"
-                ) from None
-            continue
-    raise CommitConflict(f"gave up after {max_retries} retries on {table}")
+    partition_by = _hive_layout(kept, snap.files)
+    entries, commit_id = _stage_files(kept, table, partition_by)
+    return _commit(
+        table, "replace", commit_id, entries, kept.schema, partition_by,
+        extra={"delete_condition": condition}, removed=touched, read=snap,
+        conflict=f"concurrent commit on {table} rewrote data this delete "
+        "read; re-run delete_where against the new snapshot",
+    )
 
 
 def compact_partition(
@@ -867,74 +912,33 @@ def compact_partition(
     table: str,
     partition_filter: dict[str, str],
     target_files: int = 1,
-    max_retries: int = 5,
 ) -> Snapshot:
     """Partition-scoped OPTIMIZE: coalesce only the files of ONE hive
     partition into *target_files*, committed as a ``replace`` (removed
     + added lists) marked ``data_change: false``. At 100 TB you never
     compact the whole table — you compact the partitions the streaming
     sink just fragmented, one replace commit each, while every other
-    partition's files carry over untouched by path."""
+    partition's files carry over untouched by path.
+
+    Compaction moves bytes, not rows — but only for the bytes it read:
+    a concurrent rewrite of a touched file aborts the compaction
+    instead of being overwritten by it."""
     snap = snapshot(table)
-    touched = [
-        f
-        for f in snap.files
-        if all(
-            f.get("partition_values", {}).get(k) == str(v)
-            for k, v in partition_filter.items()
-        )
-    ]
+    touched = [f for f in snap.files if _in_partition(f, partition_filter)]
     if len(touched) <= target_files:
         return snap
     df = _read_files(spark, table, touched, snap.schema).coalesce(target_files)
-    # Re-stage under the table's FULL hive layout, not just the filter
-    # keys: a filter naming a subset of a multi-column layout (e.g.
-    # {YEAR: 2024} over YEAR/MONTH) must keep the other keys, or the
-    # re-staged files lose their partition_values and later
-    # partition-filtered reads silently drop rows.
-    partition_by: list[str] = []
-    for f in touched:
-        for k in f.get("partition_values", {}):
-            if k not in partition_by:
-                partition_by.append(k)
-    for k in partition_filter:
-        if k not in partition_by:
-            partition_by.append(k)
-    for k in partition_by:
-        if k not in df.columns:
-            raise ValueError(f"partition column {k!r} not in data")
+    # the table's FULL hive layout, not just the filter keys: a filter
+    # naming a subset of a multi-column layout (e.g. {YEAR: 2024} over
+    # YEAR/MONTH) must keep the other keys
+    partition_by = _hive_layout(df, touched, tuple(partition_filter))
     entries, commit_id = _stage_files(df, table, partition_by)
-    for _ in range(max_retries):
-        versions = _list_versions(table)
-        version = (versions[-1] + 1) if versions else 0
-        manifest = {
-            "version": version,
-            "action": "replace",
-            "commit_id": commit_id,
-            "removed": [f["path"] for f in touched],
-            "files": entries,
-            "schema": snap.schema_ddl,
-            "schema_json": snap.schema_json,
-            "partition_by": partition_by,
-            "committed_at": datetime.now(timezone.utc).isoformat(),
-            "data_change": False,
-        }
-        try:
-            _try_commit(table, version, manifest)
-            out = snapshot(table, version)
-            _maybe_checkpoint(table, out)
-            return out
-        except CommitConflict:
-            # Compaction moves bytes, not rows — but only for the bytes
-            # it actually read. A concurrent rewrite of a touched file
-            # must abort the compaction, not be overwritten by it.
-            if not _conflict_retry_safe(table, snap, touched):
-                raise CommitConflict(
-                    f"concurrent commit on {table} rewrote a file this "
-                    "compaction read; re-run compact_partition"
-                ) from None
-            continue
-    raise CommitConflict(f"gave up after {max_retries} retries on {table}")
+    return _commit(
+        table, "replace", commit_id, entries, snap.schema, partition_by,
+        extra={"data_change": False}, removed=touched, read=snap,
+        conflict=f"concurrent commit on {table} rewrote a file this "
+        "compaction read; re-run compact_partition",
+    )
 
 
 def compact(
@@ -955,12 +959,7 @@ def compact(
     snap = snapshot(table)
     df = read_table(spark, table)
     if partition_by is None:
-        keys: list[str] = []
-        for f in snap.files:
-            for k in f.get("partition_values", {}):
-                if k not in keys:
-                    keys.append(k)
-        partition_by = keys or None
+        partition_by = _hive_layout(df, snap.files) or None
     if target_files is not None:
         df = df.coalesce(target_files)
     # data_change=False: compaction rearranges bytes, not rows —
@@ -978,8 +977,7 @@ def history(table: str) -> list[dict]:
     """The commit log, oldest first (version/action/rows/timestamp)."""
     out = []
     for v in _list_versions(table):
-        with open(_manifest_path(table, v)) as fh:
-            m = json.load(fh)
+        m = _read_manifest(table, v)
         out.append(
             {
                 "version": m["version"],
@@ -1029,8 +1027,7 @@ def read_changes(
     targets = [v for v in versions if from_version < v <= to_version]
     parts: list[DataFrame] = []
     for v in targets:
-        with open(_manifest_path(table, v)) as fh:
-            m = json.load(fh)
+        m = _read_manifest(table, v)
         if m.get("data_change") is False:
             continue
         commit_schema = (

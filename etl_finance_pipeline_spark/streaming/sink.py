@@ -22,8 +22,7 @@ import os
 from pyspark.sql import DataFrame
 
 from etl_finance_pipeline_spark.sources.table_format import (
-    _list_versions,
-    _manifest_path,
+    history,
     last_committed_epoch,
     write_table,
 )
@@ -34,15 +33,7 @@ def committed_batch_ids(table: str) -> set[int]:
     introspection/debugging only. The dedupe decision uses
     :func:`last_committed_epoch`, which is O(checkpoint interval) and
     survives vacuum via the checkpointed high-water mark."""
-    import json
-
-    out: set[int] = set()
-    for v in _list_versions(table):
-        with open(_manifest_path(table, v)) as fh:
-            b = json.load(fh).get("source_batch_id")
-        if b is not None:
-            out.add(int(b))
-    return out
+    return {int(h["source_batch_id"]) for h in history(table) if h["source_batch_id"] is not None}
 
 
 def await_stream(q, timeout: float = 300.0) -> None:

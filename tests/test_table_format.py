@@ -523,63 +523,98 @@ def test_compact_partition_scoped_replace(spark, tmp_path):
     assert read_changes(spark, t, from_version=3).count() == 0
 
 
-def test_merge_conflict_does_not_resurrect_deleted_rows(spark, tmp_path, monkeypatch):
-    """A merge that loses the commit race to a DELETE touching its
-    rewrite set must abort — re-claiming the next version with its
+def _day_df(spark, rows):
+    return spark.createDataFrame(rows, "SYMBOL string, DAY int, CLOSE double")
+
+
+def _day_rows(spark, t):
+    return {tuple(r) for r in read_table(spark, t).select("SYMBOL", "DAY", "CLOSE").collect()}
+
+
+def _day_table(spark, t):
+    """A SYMBOL-partitioned table whose GBPUSD partition holds two
+    files: (EURUSD, 1), (GBPUSD, 1) at v0 and (GBPUSD, 2) at v1."""
+    write_table(_day_df(spark, [("EURUSD", 1, 1.0), ("GBPUSD", 1, 2.0)]), t, partition_by=["SYMBOL"])
+    write_table(_day_df(spark, [("GBPUSD", 2, 3.0)]), t, partition_by=["SYMBOL"])
+
+
+# each replace writer, run on GBPUSD's day-2 row, and the rows it leaves
+# in the table above
+_REWRITERS = {
+    "merge_table": (
+        lambda tf, spark, t: tf.merge_table(
+            spark, t, _day_df(spark, [("GBPUSD", 2, 30.0)]), ["SYMBOL", "DAY"]
+        ),
+        {("GBPUSD", 1, 2.0), ("GBPUSD", 2, 30.0)},
+    ),
+    "delete_where": (
+        lambda tf, spark, t: tf.delete_where(spark, t, "DAY = 2", stats_pruning=[("DAY", ">=", 2)]),
+        {("GBPUSD", 1, 2.0)},
+    ),
+    "compact_partition": (
+        lambda tf, spark, t: tf.compact_partition(spark, t, {"SYMBOL": "GBPUSD"}),
+        {("GBPUSD", 1, 2.0), ("GBPUSD", 2, 3.0)},
+    ),
+}
+
+
+def _race(monkeypatch, tf, concurrent):
+    """Patch ``_try_commit`` so that *concurrent* commits first, once."""
+    orig = tf._try_commit
+    state = {"raced": False}
+
+    def racing(table, version, manifest):
+        if not state["raced"]:
+            state["raced"] = True
+            monkeypatch.setattr(tf, "_try_commit", orig)
+            concurrent()
+        return orig(table, version, manifest)
+
+    monkeypatch.setattr(tf, "_try_commit", racing)
+    return state
+
+
+@pytest.mark.parametrize("writer", sorted(_REWRITERS))
+def test_merge_conflict_does_not_resurrect_deleted_rows(spark, tmp_path, monkeypatch, writer):
+    """A replace writer that loses the commit race to a DELETE touching
+    its rewrite set must abort — re-claiming the next version with its
     pre-conflict file lists would re-insert the deleted rows."""
     import etl_finance_pipeline_spark.sources.table_format as tf
 
     t = str(tmp_path / "tbl_race")
-    write_table(_df(spark, [("EURUSD", 1.0), ("GBPUSD", 2.0)]), t)
-
-    orig = tf._try_commit
-    state = {"raced": False}
-
-    def racing(table, version, manifest):
-        if not state["raced"]:
-            state["raced"] = True
-            # A concurrent writer wins this version with a DELETE that
-            # rewrites the file our merge also read.
-            monkeypatch.setattr(tf, "_try_commit", orig)
-            tf.delete_where(spark, t, "SYMBOL = 'EURUSD'")
-        return orig(table, version, manifest)
-
-    monkeypatch.setattr(tf, "_try_commit", racing)
-    with pytest.raises(CommitConflict, match="re-run merge_table"):
-        tf.merge_table(spark, t, _df(spark, [("GBPUSD", 20.0)]), ["SYMBOL"])
+    _day_table(spark, t)
+    run, fresh = _REWRITERS[writer]
+    # the concurrent delete rewrites every file, including those ours read
+    state = _race(monkeypatch, tf, lambda: tf.delete_where(spark, t, "SYMBOL = 'EURUSD'"))
+    with pytest.raises(CommitConflict, match=f"re-run {writer}"):
+        run(tf, spark, t)
+    assert state["raced"]
 
     # the concurrent delete's outcome survives — EURUSD stays gone
-    got = {tuple(r) for r in read_table(spark, t).collect()}
-    assert got == {("GBPUSD", 2.0)}
+    assert _day_rows(spark, t) == {("GBPUSD", 1, 2.0), ("GBPUSD", 2, 3.0)}
 
-    # a fresh merge against the new snapshot applies cleanly
-    tf.merge_table(spark, t, _df(spark, [("GBPUSD", 20.0)]), ["SYMBOL"])
-    got = {tuple(r) for r in read_table(spark, t).collect()}
-    assert got == {("GBPUSD", 20.0)}
+    # a fresh run against the new snapshot applies cleanly
+    run(tf, spark, t)
+    assert _day_rows(spark, t) == fresh
 
 
-def test_merge_conflict_with_disjoint_append_retries(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("writer", sorted(_REWRITERS))
+def test_merge_conflict_with_disjoint_append_retries(spark, tmp_path, monkeypatch, writer):
     """Losing the race to an APPEND of unrelated keys is benign: the
-    merge retries at the next version and both commits land."""
+    replace writer retries at the next version and both commits land."""
     import etl_finance_pipeline_spark.sources.table_format as tf
 
     t = str(tmp_path / "tbl_race2")
-    write_table(_df(spark, [("EURUSD", 1.0)]), t)
-
-    orig = tf._try_commit
-    state = {"raced": False}
-
-    def racing(table, version, manifest):
-        if not state["raced"]:
-            state["raced"] = True
-            monkeypatch.setattr(tf, "_try_commit", orig)
-            write_table(_df(spark, [("ZZZBAR", 9.0)]), t)
-        return orig(table, version, manifest)
-
-    monkeypatch.setattr(tf, "_try_commit", racing)
-    tf.merge_table(spark, t, _df(spark, [("EURUSD", 10.0)]), ["SYMBOL"])
-    got = {tuple(r) for r in read_table(spark, t).collect()}
-    assert got == {("EURUSD", 10.0), ("ZZZBAR", 9.0)}
+    _day_table(spark, t)
+    run, expected = _REWRITERS[writer]
+    state = _race(
+        monkeypatch,
+        tf,
+        lambda: write_table(_day_df(spark, [("ZZZBAR", 9, 9.0)]), t, partition_by=["SYMBOL"]),
+    )
+    snap = run(tf, spark, t)
+    assert state["raced"] and snap.version == 3
+    assert _day_rows(spark, t) == {("EURUSD", 1, 1.0), ("ZZZBAR", 9, 9.0)} | expected
 
 
 def test_compact_partition_keeps_other_hive_keys(spark, tmp_path):
@@ -615,14 +650,16 @@ def test_compact_partition_keeps_other_hive_keys(spark, tmp_path):
     ]
 
 
-def test_concurrent_appends_all_land(spark, tmp_path):
+def test_concurrent_appends_all_land(spark, tmp_path, monkeypatch):
     """Optimistic concurrency under real thread interleaving: N writers
     appending disjoint rows in parallel must all commit (with retries),
     produce N distinct versions, and lose no rows."""
     import threading
 
+    import etl_finance_pipeline_spark.sources.table_format as tf
     from etl_finance_pipeline_spark.sources.table_format import write_table as wt
 
+    monkeypatch.setattr(tf, "_MAX_RETRIES", 50)
     t = str(tmp_path / "tbl_threads")
     write_table(_df(spark, [("SEED", 0.0)]), t)
 
@@ -630,7 +667,7 @@ def test_concurrent_appends_all_land(spark, tmp_path):
 
     def writer(i: int) -> None:
         try:
-            wt(_df(spark, [(f"SYM{i}", float(i))]), t, max_retries=50)
+            wt(_df(spark, [(f"SYM{i}", float(i))]), t)
         except Exception as exc:  # noqa: BLE001
             errors.append(exc)
 
@@ -729,3 +766,80 @@ def test_changefeed_near_dup_reads_only_changed_files(spark, tmp_path):
     assert scanned == v1_new
     pairs = changefeed_near_dup(spark, t, from_version=0, threshold=0.9)
     assert {(r["batch_id"], r["corpus_id"]) for r in pairs.collect()} == {(100, 3)}
+
+
+_TS_DDL = "SYMBOL string, TIMESTAMP timestamp, CLOSE double"
+
+
+def test_merge_on_timestamp_key_carries_untouched_days(spark, tmp_path):
+    """MERGE keyed on (SYMBOL, TIMESTAMP): manifests store timestamp
+    stats as strings while the source bounds are datetimes — the bounds
+    must compare as times, so revised rows are replaced and the day the
+    source does not touch keeps its files by path."""
+    from datetime import datetime, timedelta
+
+    from etl_finance_pipeline_spark.sources.table_format import merge_table
+
+    t = str(tmp_path / "tbl")
+    t0 = datetime(2024, 3, 4)
+    for day in range(2):  # one append per day
+        rows = [
+            (s, t0 + timedelta(days=day, minutes=m), float(m))
+            for s in ("EURUSD", "GBPUSD")
+            for m in range(3)
+        ]
+        write_table(spark.createDataFrame(rows, _TS_DDL), t, partition_by=["SYMBOL"])
+    day0 = {f["path"] for f in snapshot(t, 0).files}
+    stamp = t0 + timedelta(days=1, minutes=1)
+    snap = merge_table(
+        spark, t, spark.createDataFrame([("EURUSD", stamp, -1.0)], _TS_DDL), ["SYMBOL", "TIMESTAMP"]
+    )
+    assert day0 <= {f["path"] for f in snap.files}
+    got = {(r["SYMBOL"], r["TIMESTAMP"], r["CLOSE"]) for r in read_table(spark, t).collect()}
+    assert len(got) == 12
+    assert ("EURUSD", stamp, -1.0) in got and ("EURUSD", stamp, 1.0) not in got
+
+
+def test_iso_stats_filter_keeps_files_on_the_bounds_day(spark, tmp_path):
+    """An ISO-8601 bound compares as a time, whichever separator it
+    uses: the file whose last stamp falls later on the bound's day is
+    kept, and the file wholly before the bound is still skipped."""
+    from datetime import datetime
+
+    from pyspark.sql import functions as F
+
+    t = str(tmp_path / "tbl")
+    for day in (4, 5):
+        rows = [("EURUSD", datetime(2024, 3, day, h, m), float(h)) for h, m in ((0, 0), (12, 0), (23, 50))]
+        write_table(spark.createDataFrame(rows, _TS_DDL), t)
+    day5_dirs = {f["path"].split(os.sep)[1] for f in snapshot(t).files} - {
+        f["path"].split(os.sep)[1] for f in snapshot(t, 0).files
+    }
+    for bound in ("2024-03-05T12:00:00", "2024-03-05 12:00:00", datetime(2024, 3, 5, 12)):
+        out = read_table(spark, t, stats_filter=[("TIMESTAMP", ">=", bound)])
+        assert {p.split("/data/")[1].split("/")[0] for p in out.inputFiles()} == day5_dirs
+        assert out.filter(F.col("TIMESTAMP") >= F.lit(bound).cast("timestamp")).count() == 2
+
+
+def test_merge_and_delete_keep_hive_layout(spark, tmp_path):
+    """Rewrites are staged under the table's hive layout: after a merge,
+    and after a delete, a one-symbol partition-filtered read equals the
+    unfiltered read filtered to that symbol."""
+    from pyspark.sql import functions as F
+
+    from etl_finance_pipeline_spark.sources.table_format import delete_where, merge_table
+
+    rewrites = {
+        "merge": lambda t: merge_table(spark, t, _df(spark, [("EURUSD", 5.0)]), ["SYMBOL"]),
+        "delete": lambda t: delete_where(spark, t, "CLOSE = 3.0"),
+    }
+    for name, rewrite in rewrites.items():
+        t = str(tmp_path / name)
+        rows = [("EURUSD", 1.0), ("GBPUSD", 2.0), ("EURUSD", 3.0)]
+        write_table(_df(spark, rows), t, partition_by=["SYMBOL"])
+        rewrite(t)
+        assert all(f["partition_values"].get("SYMBOL") for f in snapshot(t).files)
+        for sym in ("EURUSD", "GBPUSD"):
+            pruned = read_table(spark, t, partition_filter={"SYMBOL": sym}).collect()
+            full = read_table(spark, t).filter(F.col("SYMBOL") == sym).collect()
+            assert pruned and sorted(map(tuple, pruned)) == sorted(map(tuple, full)), (name, sym)
