@@ -73,7 +73,6 @@ class TimezoneConfig(BaseModel):
 
 
 class GapConfig(BaseModel):
-    short_gap_minutes: int = 5
     use_ffill_for: list[str] = Field(default_factory=lambda: ["VOLUME"])
     interpolate_prices: bool = True
 

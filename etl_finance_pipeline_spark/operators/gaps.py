@@ -29,8 +29,6 @@ millions of keys at 100 TB this parallelizes wide.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -234,13 +232,6 @@ def interpolate_linear(
     return df.withColumns(exprs)
 
 
-@dataclass
-class GapRepairResult:
-    df: DataFrame
-    gaps: DataFrame
-    report: dict = field(default_factory=dict)
-
-
 def repair_gaps(
     df: DataFrame,
     rule: str,
@@ -248,16 +239,18 @@ def repair_gaps(
     ts_col: str = "TIMESTAMP",
     use_ffill_for: list[str] | None = None,
     interpolate_prices: bool = True,
-    short_gap_minutes: int = 5,
-    collect_report: bool = False,
-) -> GapRepairResult:
+) -> DataFrame:
     """Reindex to the expected grid and apply repair policies —
     composition parity with gaps.py:121-190 (G1-G8):
     ffill FIRST for *use_ffill_for* columns, THEN linear interpolation
     of price columns NOT in the ffill list.
+
+    Returns the repaired frame only. The reference's report pieces are
+    separate calls over frames: :func:`detect_gaps` lists the gaps, and
+    ``data_quality_report`` over the returned frame gives its row and
+    per-column NULL counts.
     """
     use_ffill_for = use_ffill_for if use_ffill_for is not None else ["VOLUME"]
-    gaps = detect_gaps(df, rule, key_cols, ts_col, short_gap_minutes)
     reindexed = reindex_to_grid(df, rule, key_cols, ts_col)
 
     if use_ffill_for:
@@ -269,23 +262,4 @@ def repair_gaps(
         price_cols = [c for c in price_cols if c not in use_ffill_for]
     if interpolate_prices and price_cols:
         reindexed = interpolate_linear(reindexed, price_cols, key_cols, ts_col)
-
-    report: dict = {}
-    if collect_report:
-        # Both report aggregates and the returned frame reuse the
-        # repaired plan — persist so the upstream chain (grid join +
-        # windows) runs once, not once per action.
-        reindexed = reindexed.persist()
-        remaining = reindexed.agg(
-            F.count("*").alias("rows_after"),
-            *[
-                F.sum(F.col(c).isNull().cast("long")).alias(f"remaining_nulls_{c}")
-                for c in reindexed.columns
-            ],
-        ).collect()[0]
-        report["rows_after"] = remaining["rows_after"]
-        report["remaining_nans"] = {
-            c: remaining[f"remaining_nulls_{c}"] for c in reindexed.columns
-        }
-        report["detected_gaps"] = [r.asDict() for r in gaps.collect()]
-    return GapRepairResult(df=reindexed, gaps=gaps, report=report)
+    return reindexed

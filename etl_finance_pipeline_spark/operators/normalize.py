@@ -5,13 +5,13 @@ Capability parity with the reference's normalize stage
 Spark: the rename algorithm is driver-side schema logic (it never
 touches data), dtype/datetime coercions are `try_cast`-style Catalyst
 expressions, dedupe is a ranking window, and the `df.attrs` report
-side-channel becomes an explicit lazily-computed report DataFrame.
+side-channel becomes per-row flag columns summed into a report dict.
 
 Scale notes:
  * Rename / required-column checks are O(#columns) on the driver.
- * Coercion-count reporting is ONE wide aggregate over the frame —
-   map-side partial aggregation, no extra shuffle beyond the final
-   1-row reduce.
+ * The whole normalization report (rows, coercions, NULLed stamps)
+   is ONE wide aggregate over the frame — map-side partial
+   aggregation, no extra shuffle beyond the final 1-row reduce.
  * Keep-first dedupe is a `row_number()` window over (keys, order) —
    one shuffle on the dedupe keys; at 100 TB this is hash-partitioned
    by (symbol) so it scales with the number of symbols × time range.
@@ -26,7 +26,6 @@ from zoneinfo import ZoneInfo
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from etl_finance_pipeline_spark.config import (
@@ -114,35 +113,24 @@ def validate_required_columns(
 
 def enforce_dtypes(
     df: DataFrame, numeric_columns: list[str] | None = None
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """try_cast every present canonical numeric column to double.
 
-    Returns (coerced_df, report_df) where report_df is a 1-row frame
-    with one ``coerced_<col>`` count per column = values that were
-    non-null before the cast but null after (pandas
-    ``to_numeric(errors="coerce")`` semantics). The report is a single
-    wide aggregate — collect it only when needed.
+    Each cast column ``<col>`` gets a boolean ``_coerced_<col>`` flag
+    alongside it: non-null before the cast, null after (pandas
+    ``to_numeric(errors="coerce")`` semantics). The flag is written in
+    the same projection as the cast because a Column taken before the
+    replacement re-resolves by name against the cast value;
+    :func:`normalize_df` sums the flags into ``coerced_<col>`` counts
+    and drops them.
     """
     cols = [c for c in (numeric_columns or NUMERIC_COLUMNS) if c in df.columns]
-    if not cols:
-        return df, df.sparkSession.createDataFrame([], T.StructType([]))
-
-    casted = df.withColumns(
-        {c: F.expr(f"try_cast(`{c}` as double)").alias(c) for c in cols}
-    )
-    # Count coercions against the original values in one pass.
-    report = df.agg(
-        *[
-            F.sum(
-                (
-                    F.col(c).isNotNull()
-                    & F.expr(f"try_cast(`{c}` as double)").isNull()
-                ).cast("long")
-            ).alias(f"coerced_{c}")
-            for c in cols
-        ]
-    )
-    return casted, report
+    exprs: dict[str, Column] = {}
+    for c in cols:
+        cast = F.expr(f"try_cast(`{c}` as double)")
+        exprs[c] = cast
+        exprs[f"_coerced_{c}"] = F.col(c).isNotNull() & cast.isNull()
+    return df.withColumns(exprs)
 
 
 # --------------------------------------------------------------------
@@ -234,17 +222,18 @@ def normalize_datetime(
       CONSERVATIVE static default. String inputs whose values all
       carry explicit UTC offsets (``+02:00``/``Z`` suffixes) need no
       assumption, exactly as the reference's tz-aware-index path
-      (normalize.py:198-199) skips the flag: the lazy
-      ``_naive_count_expr`` lets :func:`normalize_df` refine the flag
-      from the data (offset-less parsed rows > 0 ⇔ review needed).
+      (normalize.py:198-199) skips the flag: string inputs get a
+      ``_ts_no_offset`` flag column (parsed, no offset suffix) from
+      which :func:`normalize_df` refines the flag (any such row ⇔
+      review needed).
 
     Returns (df, policy_report). The returned df always has *ts_col* as
-    TimestampType in UTC, plus the ``_ts_was_null`` helper flag column
-    (listed in the report's ``_helper_cols``; :func:`normalize_df`
-    drops it after aggregating the report) — the count expressions
-    must see the PRE-coercion nullness, and a Column captured before
-    ``withColumn`` re-resolves BY NAME against the replaced column,
-    so the flag has to be materialized alongside the replacement.
+    TimestampType in UTC, plus the ``_ts_was_null`` flag column
+    (:func:`normalize_df` drops the flags after summing them into its
+    report) — the NULL count must see the PRE-coercion nullness, and a
+    Column captured before ``withColumn`` re-resolves BY NAME against
+    the replaced column, so the flag has to be materialized alongside
+    the replacement.
     """
     ts = ts_col or detect_datetime_column(df)
     dtype = dict(df.dtypes)[ts]
@@ -260,7 +249,6 @@ def normalize_datetime(
         coerced = F.try_to_timestamp(original.cast("string"))
 
     report: dict = {"needs_review": False, "source_tz": source_tz or "UTC(assumed)"}
-    helper_cols = ["_ts_was_null"]
 
     if source_tz and source_tz.upper() != "UTC":
         windows = dst_transition_windows(source_tz, *data_years)
@@ -307,19 +295,11 @@ def normalize_datetime(
                     r"([+-]\d{2}:?\d{2}|Z)\s*$"
                 )
                 cols["_ts_no_offset"] = coerced.isNotNull() & ~has_offset
-                helper_cols.append("_ts_no_offset")
-                report["_naive_count_expr"] = F.sum(
-                    F.col("_ts_no_offset").cast("long")
-                ).alias("ts_naive_no_offset")
         df2 = df.withColumns(cols)
 
     # target tz: Spark timestamps are UTC-internal; conversion is a
     # display concern (D4). We record the contract only.
     report["target_tz"] = target_tz
-    report["_helper_cols"] = helper_cols
-    report["_null_count_expr"] = F.sum(
-        (F.col(ts).isNull() & ~F.col("_ts_was_null")).cast("long")
-    ).alias("ts_coerced_to_null")
     return df2, report
 
 
@@ -400,9 +380,13 @@ def normalize_df(
     target_tz: str = "UTC",
     dedupe_keys: list[str] | None = None,
     dedupe_order: list[str | Column] | None = None,
-    collect_report: bool = True,
 ) -> NormalizeResult:
     """rename → validate → coerce dtypes → datetime/tz → dedupe.
+
+    The report is ONE aggregate over the pre-dedupe frame: the row
+    count plus the sum of every per-row flag the steps added
+    (``_coerced_<col>``, ``_ts_was_null``, ``_ts_no_offset``); the
+    flags are dropped before the dedupe.
 
     The global time sort of the reference (normalize.py:275) is
     deliberately NOT applied here: in Spark, ordering is declared
@@ -410,38 +394,41 @@ def normalize_df(
     sort would be a pointless full shuffle at scale. Sinks that want
     sorted files use ``sortWithinPartitions`` at write time.
     """
-    report: dict = {}
     out = normalize_columns(df, columns_map)
     validate_required_columns(out, required_columns)
-    out, coercion_report = enforce_dtypes(out)
-    out, dt_report = normalize_datetime(
-        out, source_tz=source_tz, target_tz=target_tz
+    out = enforce_dtypes(out)
+    ts = detect_datetime_column(out)
+    out, tz_report = normalize_datetime(
+        out, ts_col=ts, source_tz=source_tz, target_tz=target_tz
     )
-    null_count_expr = dt_report.pop("_null_count_expr")
-    naive_count_expr = dt_report.pop("_naive_count_expr", None)
-    helper_cols = dt_report.pop("_helper_cols", [])
-    report["timezone"] = dt_report
 
-    before = out  # keeps the helper flag columns for the report agg
-    out = out.drop(*helper_cols)
+    coerced = [c[1:] for c in out.columns if c.startswith("_coerced_")]
+    naive = "_ts_no_offset" in out.columns
+    aggs = [
+        F.count("*").alias("rows_before"),
+        F.sum((F.col(ts).isNull() & ~F.col("_ts_was_null")).cast("long")).alias(
+            "ts_coerced_to_null"
+        ),
+        *[F.sum(F.col(f"_{k}").cast("long")).alias(k) for k in coerced],
+    ]
+    if naive:
+        aggs.append(F.sum(F.col("_ts_no_offset").cast("long")).alias("naive"))
+    row = out.agg(*aggs).collect()[0]
+    if naive:
+        # refine the conservative static flag from the data: all stamps
+        # carried explicit offsets -> no UTC assumption was actually
+        # made (reference tz-aware-index parity)
+        tz_report["needs_review"] = bool((row["naive"] or 0) > 0)
+    report = {
+        "timezone": tz_report,
+        "rows_before_dedupe": row["rows_before"],
+        "ts_coerced_to_null": row["ts_coerced_to_null"],
+        "coercions": {k: row[k] for k in coerced},
+    }
+
+    out = out.drop("_ts_was_null", "_ts_no_offset", *[f"_{k}" for k in coerced])
     keys = dedupe_keys or (["SYMBOL", "TIMESTAMP"] if "SYMBOL" in out.columns else ["TIMESTAMP"])
     out = remove_duplicates(out, keys, dedupe_order)
-
-    if collect_report:
-        aggs = [F.count("*").alias("rows_before"), null_count_expr]
-        if naive_count_expr is not None:
-            aggs.append(naive_count_expr)
-        agg_row = before.agg(*aggs).collect()[0]
-        report["rows_before_dedupe"] = agg_row["rows_before"]
-        report["ts_coerced_to_null"] = agg_row["ts_coerced_to_null"]
-        if naive_count_expr is not None:
-            # refine the conservative static flag from the data: all
-            # stamps carried explicit offsets -> no UTC assumption was
-            # actually made (reference tz-aware-index parity)
-            report["timezone"]["needs_review"] = bool(
-                (agg_row["ts_naive_no_offset"] or 0) > 0
-            )
-        report["coercions"] = coercion_report.collect()[0].asDict() if coercion_report.columns else {}
     return NormalizeResult(df=out, report=report)
 
 

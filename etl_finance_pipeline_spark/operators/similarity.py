@@ -1142,9 +1142,11 @@ def ivfpq_topk(
     IVF cell assignment (:func:`ivf_assign` family) and PQ
     train/encode/ADC (:func:`pq_train`).
 
-    Spark shape (100 TB): the coarse codebook broadcasts (k×dim
-    doubles); corpus assignment is a broadcast join + per-vector top-1
-    window; residual PQ training/encoding touch the residual frame
+    Spark shape (100 TB): the coarse codebook is collected to the
+    driver and embedded in the plan as literal arrays (k×dim doubles,
+    so plan size grows with the codebook); corpus assignment is a
+    narrow per-vector argmin over those literals, with no join and no
+    exchange; residual PQ training/encoding touch the residual frame
     (localCheckpointed once — it feeds every Lloyd pass and the
     encode); the search joins (id, cid, s, code) int tuples against a
     BROADCAST distance-table frame (n_queries·nprobe·m·ksub rows, tiny

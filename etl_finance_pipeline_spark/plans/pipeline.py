@@ -160,18 +160,17 @@ def _fan_out(
         # no timeframes: raw path, repair at hardcoded 1T and no
         # resample (run.py:150-190); else repair AT the timeframe, then
         # resample to it
-        rep = repair_gaps(
+        repaired = repair_gaps(
             norm_df,
             tf or "1T",
             ["SYMBOL"],
             use_ffill_for=cfg.gaps.use_ffill_for,
             interpolate_prices=cfg.gaps.interpolate_prices,
-            short_gap_minutes=cfg.gaps.short_gap_minutes,
         )
         if tf is None:
-            return rep.df
+            return repaired
         return resample_ohlc(
-            rep.df,
+            repaired,
             tf,
             ["SYMBOL"],
             drop_incomplete=cfg.resample.drop_incomplete,

@@ -243,11 +243,16 @@ def load_directory(
             result.metadata.append(
                 {"format": fmt, "files": len(files), "columns": df.columns, "status": "ok"}
             )
-        except Exception as exc:  # unreadable group → per-file fallback
+        except Exception:  # unreadable group → per-file fallback
+            readable = []
             for f in files:
                 try:
-                    one = readers[fmt](f)
-                    result.frames.setdefault(fmt, one)
-                except Exception:
+                    readable.append(readers[fmt](f))
+                except Exception as exc:
                     result.quarantined_files.append({"file": f, "reason": str(exc)})
+            if readable:
+                df = readable[0]
+                for one in readable[1:]:
+                    df = df.unionByName(one, allowMissingColumns=True)
+                result.frames[fmt] = df
     return result

@@ -29,6 +29,7 @@ def test_yaml_load_with_env_expansion(tmp_path, monkeypatch):
         "paths:\n  raw_path: ${DATA_ROOT}/raw\n"
         "parquet:\n  compression: snappy\n  row_group_size: 65536\n"
         "performance:\n  cache_normalized: true\n  overlap_timeframes: 3\n"
+        "gaps:\n  short_gap_minutes: 5\n"
         "schema:\n  columns_map:\n    open: [o, open]\n"
     )
     cfg = load_config(str(p))

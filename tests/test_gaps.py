@@ -100,27 +100,29 @@ def test_interpolate_matches_pandas(spark):
 
 
 def test_repair_gaps_full_composition(spark):
+    from etl_finance_pipeline_spark.operators.report import data_quality_report
+
     df = (
         _series(spark, [0, 1, 2, 5, 6, 7, 8, 9])
         .withColumn("OPEN", F.col("CLOSE") - 0.5)
         .withColumn("VOLUME", F.lit(7.0))
     )
-    res = repair_gaps(df, "1T", ["SYMBOL"], collect_report=True)
-    assert res.report["rows_after"] == 10
+    repaired = repair_gaps(df, "1T", ["SYMBOL"])
+    dq = data_quality_report(repaired, compute_indicators=False).collect()[0]
+    assert dq["rows"] == 10
     # VOLUME forward-filled, prices interpolated -> no NULLs remain
-    assert res.report["remaining_nans"]["VOLUME"] == 0
-    assert res.report["remaining_nans"]["CLOSE"] == 0
-    assert res.report["remaining_nans"]["OPEN"] == 0
-    assert len(res.report["detected_gaps"]) == 1
-    gap = res.report["detected_gaps"][0]
-    assert gap["missing_count"] == 2
+    assert dq["nulls_VOLUME"] == 0
+    assert dq["nulls_CLOSE"] == 0
+    assert dq["nulls_OPEN"] == 0
+    gaps = detect_gaps(df, "1T", ["SYMBOL"]).collect()
+    assert len(gaps) == 1
+    assert gaps[0]["missing_count"] == 2
     # interpolated CLOSE at minute 3: between 102 and 105 -> 103
-    row = res.df.filter(
+    row = repaired.filter(
         F.col("TIMESTAMP") == T0 + timedelta(minutes=3)
     ).collect()[0]
     assert abs(row["CLOSE"] - 103.0) < 1e-9
     assert row["VOLUME"] == 7.0
-    res.df.unpersist()
 
 
 def test_gap_engine_empty_frame(spark):

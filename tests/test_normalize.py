@@ -75,12 +75,14 @@ def test_enforce_dtypes_coercion_counts(spark):
     df = spark.createDataFrame(
         [("1.5", "x"), ("2.0", "3"), (None, "bad")], ["OPEN", "CLOSE"]
     )
-    out, report = enforce_dtypes(df)
+    out = enforce_dtypes(df)
     types = dict(out.dtypes)
     assert types["OPEN"] == "double" and types["CLOSE"] == "double"
-    r = report.collect()[0]
-    assert r["coerced_OPEN"] == 0  # null stays null, not a coercion
-    assert r["coerced_CLOSE"] == 2  # "x" and "bad"
+    r = out.agg(
+        *[F.sum(F.col(f"_coerced_{c}").cast("long")).alias(c) for c in ("OPEN", "CLOSE")]
+    ).collect()[0]
+    assert r["OPEN"] == 0  # null stays null, not a coercion
+    assert r["CLOSE"] == 2  # "x" and "bad"
 
 
 def test_remove_duplicates_keep_first(spark):
@@ -164,6 +166,48 @@ def test_normalize_df_composition(spark):
     assert res.report["coercions"]["coerced_OPEN"] == 1  # "oops"
     kept = res.df.filter(F.col("seq") == 1).collect()
     assert len(kept) == 1 and abs(kept[0]["OPEN"] - 1.10) < 1e-12
+
+
+def test_normalize_df_report_is_one_action(spark, monkeypatch):
+    """The whole report (rows, timestamp and numeric coercions, the
+    offset-less refinement of needs_review) comes from one collect."""
+    df = spark.createDataFrame(
+        [
+            ("EURUSD", "2024-01-01 00:00:00", "1.10", 1),
+            ("EURUSD", "2024-01-01 00:00:00", "1.20", 2),
+            ("EURUSD", "2024-01-01 00:01:00", "oops", 3),
+            ("EURUSD", "not a stamp", "1.30", 4),
+            ("EURUSD", None, None, 5),
+        ],
+        ["SYMBOL", "time", "open", "seq"],
+    ).withColumns({c: F.lit(1.0) for c in ("high", "low", "close")})
+    frame_cls = type(df)  # the concrete (classic) DataFrame class
+    real_collect = frame_cls.collect
+    calls = []
+
+    def counting_collect(self):
+        calls.append(self)
+        return real_collect(self)
+
+    monkeypatch.setattr(frame_cls, "collect", counting_collect)
+    res = normalize_df(df, dedupe_order=[F.col("seq")])
+    assert len(calls) == 1
+    assert res.report == {
+        "timezone": {
+            "needs_review": True,  # offset-less stamps were assumed UTC
+            "source_tz": "UTC(assumed)",
+            "target_tz": "UTC",
+        },
+        "rows_before_dedupe": 5,
+        "ts_coerced_to_null": 1,  # "not a stamp"; the NULL stamp is not counted
+        "coercions": {
+            "coerced_OPEN": 1,  # "oops"; the NULL price is not counted
+            "coerced_HIGH": 0,
+            "coerced_LOW": 0,
+            "coerced_CLOSE": 0,
+        },
+    }
+    assert not any(c.startswith(("_coerced_", "_ts_")) for c in res.df.columns)
 
 
 def test_remove_duplicates_window_strategy_equivalent(spark):

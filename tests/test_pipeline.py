@@ -169,9 +169,9 @@ def _fused_chain(spark, fuse: bool):
     if fuse:
         df = df.repartition("SYMBOL")
     dd = remove_duplicates(df, ["SYMBOL", "TIMESTAMP"], ["_seq"]).drop("_seq")
-    rep = repair_gaps(dd, "1T", ["SYMBOL"], use_ffill_for=["VOLUME", "CLOSE"])
+    repaired = repair_gaps(dd, "1T", ["SYMBOL"], use_ffill_for=["VOLUME", "CLOSE"])
     return resample_ohlc(
-        rep.df.withColumn("OPEN", F.col("CLOSE"))
+        repaired.withColumn("OPEN", F.col("CLOSE"))
         .withColumn("HIGH", F.col("CLOSE"))
         .withColumn("LOW", F.col("CLOSE")),
         "5T",
@@ -281,6 +281,47 @@ def test_run_pipeline_partial_failure_logs_committed_writes(
     # the first lane starts before the failing one, so it always commits
     assert str(processed / "candles_1m") in sidecars
     assert str(processed / "candles_5m") not in sidecars
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached_before
+
+
+def test_run_pipeline_partial_failure_logs_committed_table_versions(
+    spark, tmp_path, monkeypatch
+):
+    """The transactional sink under the same injected 5m failure: the
+    export log names exactly the tables with a committed version, each
+    with the version it committed, and the normalized frame's cache is
+    released."""
+    from etl_finance_pipeline_spark.sources import table_format
+
+    real_write = table_format.write_table
+
+    def write_all_but_5m(df, table, **kwargs):
+        if table.endswith("candles_5m"):
+            raise RuntimeError("injected 5m write failure")
+        return real_write(df, table, **kwargs)
+
+    monkeypatch.setattr(table_format, "write_table", write_all_but_5m)
+    _write_raw(tmp_path)
+    cfg = _cfg(tmp_path, ["1T", "5T", "15T"])
+    cfg.parquet.transactional = True
+    cached_before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="injected 5m"):
+        run_pipeline(spark, cfg, dry_run=False)
+
+    processed = tmp_path / "processed"
+    committed = {
+        str(processed / f"candles_{tf}"): [
+            h["version"] for h in table_format.history(str(processed / f"candles_{tf}"))
+        ]
+        for tf in ("1m", "5m", "15m")
+    }
+    log = (tmp_path / "logs" / "export_log.ndjson").read_text().splitlines()
+    logged = {e["output"]: e["table_version"] for e in map(json.loads, log)}
+    assert len(logged) == len(log)
+    assert logged == {out: versions[-1] for out, versions in committed.items() if versions}
+    # the first lane starts before the failing one, so it always commits
+    assert committed[str(processed / "candles_1m")] == [0]
+    assert committed[str(processed / "candles_5m")] == []
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached_before
 
 

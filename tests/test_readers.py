@@ -89,6 +89,31 @@ def test_load_directory_mixed(spark, tmp_path):
     assert statuses.get("csv") == "ok"
 
 
+def test_load_directory_fallback_keeps_every_readable_file(spark, tmp_path):
+    """One unreadable file fails the group read; the per-file fallback
+    loads every other file of the format and quarantines only the bad
+    one."""
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    (raw / "a_bad.parquet").write_bytes(b"not a parquet file")
+    for sym in ("b_EURUSD", "c_GBPUSD"):
+        stage = tmp_path / sym
+        spark.createDataFrame(
+            [(sym, f"2024-01-01 00:0{m}:00", 1.0 + m) for m in range(3)],
+            ["sym", "ts", "open"],
+        ).coalesce(1).write.parquet(str(stage))
+        part = next(p for p in stage.iterdir() if p.suffix == ".parquet")
+        part.rename(raw / f"{sym}.parquet")
+    res = load_directory(spark, str(raw))
+    df = res.frames["parquet"]
+    assert df.count() == 6
+    assert {r["sym"] for r in df.select("sym").distinct().collect()} == {
+        "b_EURUSD",
+        "c_GBPUSD",
+    }
+    assert [q["file"] for q in res.quarantined_files] == [str(raw / "a_bad.parquet")]
+
+
 def test_read_json_with_corrupt_rows(spark, tmp_path):
     from etl_finance_pipeline_spark.sources.readers import read_json
 
