@@ -323,12 +323,13 @@ def remove_duplicates(
     reproduces arrival order per input split.
 
     strategy="agg" (default): ``groupBy(keys)`` with one
-    ``min_by(col, order)`` per carried column — a HASH aggregate with
-    map-side partial combine and NO sort (each min_by buffer is a
-    primitive pair; a single ``min_by(struct(cols), ...)`` would fall
-    back to SortAggregate because struct buffers aren't mutable-typed,
-    and would also block column pruning — per-column aggregates that
-    are never referenced downstream get pruned away by Catalyst).
+    ``min_by(col, order)`` per carried column, with map-side partial
+    combine, and Catalyst prunes the aggregates of columns never
+    referenced downstream (a single ``min_by(struct(cols), ...)``
+    would block that pruning). It runs as a HASH aggregate only while
+    every buffer is fixed-width: one carried string column (the
+    pipeline's ``_source_file``) makes its min_by buffer non-mutable
+    and the plan a SortAggregate, as in ``run_pipeline``.
     REQUIREMENT: *order_by* must be unique within each key group
     (an ingest sequence is); on ties the per-column picks could mix
     rows. Prefer a SINGLE primitive order column: a multi-column order

@@ -75,6 +75,13 @@ def get_spark(
             "true",
         )
         .config("spark.sql.parquet.compression.codec", "zstd")
+        # Parquet v2 data pages: an INT32/INT64 column whose dictionary
+        # does not pay off is DELTA_BINARY_PACKED instead of PLAIN, so
+        # a sorted, evenly spaced TIMESTAMP costs near-zero bits per
+        # value (-13 % exported bytes per row on 1m candles). Every
+        # engine Parquet writer inherits it; Spark >= 3.3, pyarrow and
+        # DuckDB read these files.
+        .config("spark.hadoop.parquet.writer.version", "v2")
         # pandas-written parquet often carries TIMESTAMP(NANOS) which
         # Spark has no native type for; read as long and convert
         # explicitly (see sources.tables.load_table).

@@ -8,8 +8,8 @@ Capability parity with /root/reference/src/etl/load/exporter.py
  * YEAR/MONTH partition columns derived with ``F.year``/``F.month``
    (exporter.py:94-125) → Hive-style partition pruning on read.
  * Content hash (exporter.py:76-91): sha256 over (row count, ts
-   min/max, head-3 of key columns) — the count and span reuse the
-   validation row, so only a ``limit(3)`` collect is added: O(1)
+   min/max, earliest 3 rows of the key columns) — the count and span
+   reuse the validation row, so only one top-3 collect is added: O(1)
    driver data regardless of table size.
  * Writer knobs for the 100 TB path: zstd, ``maxRecordsPerFile`` to
    bound file sizes, optional sort-within-partitions for time-ordered
@@ -34,7 +34,9 @@ def validate_for_export(df: DataFrame, ts_col: str = "TIMESTAMP") -> dict:
     Schema assertions raise; data sanity checks come back as one
     report row: row/duplicate counts, time span, negative prices,
     LOW > min(O,H,C), HIGH < max(O,L,C) violation flags
-    (exporter.py:26-71).
+    (exporter.py:26-71). A duplicate is a repeated non-NULL stamp per
+    ``SYMBOL`` when that column is present (dedupe's key), so series
+    sharing a clock do not count against each other.
     """
     field = dict(df.dtypes).get(ts_col)
     if field is None:
@@ -43,11 +45,14 @@ def validate_for_export(df: DataFrame, ts_col: str = "TIMESTAMP") -> dict:
         raise ValueError(f"{ts_col!r} must be TimestampType, got {field}")
 
     cols = set(df.columns)
+    key = F.col(ts_col)
+    if "SYMBOL" in cols:
+        key = F.when(key.isNotNull(), F.struct("SYMBOL", ts_col))
     aggs = [
         F.count("*").alias("rows"),
         F.min(ts_col).alias("start"),
         F.max(ts_col).alias("end"),
-        (F.count(ts_col) - F.countDistinct(ts_col)).alias("duplicate_timestamps"),
+        (F.count(key) - F.countDistinct(key)).alias("duplicate_timestamps"),
     ]
     price_cols = [c for c in ("OPEN", "HIGH", "LOW", "CLOSE") if c in cols]
     for c in price_cols:
@@ -93,11 +98,15 @@ def derive_partition_columns(
 def content_hash(df: DataFrame, key_cols: list[str], validation: dict) -> str:
     """sha256 over (row count, ts min/max, head-3 of key columns) —
     cheap change-detection fingerprint (S10, exporter.py:76-91). The
-    count and span come from *validation*, the row
-    :func:`validate_for_export` already collected, so the hash itself
-    reads only the head."""
+    head is the first 3 rows ordered by *key_cols*, as the reference
+    hashes the time-sorted ``head(3)``, so the hash does not depend on
+    how *df* is partitioned. The count and span come from
+    *validation*, the row :func:`validate_for_export` already
+    collected, so the hash itself runs one top-3 job."""
     present = [c for c in key_cols if c in df.columns]
-    head = df.select(*present).limit(3).collect() if present else []
+    head = (
+        df.select(*present).orderBy(*present).limit(3).collect() if present else []
+    )
     payload = json.dumps(
         {
             "rows": validation["rows"],

@@ -238,11 +238,7 @@ def load_directory(
     }
     for fmt, files in by_format.items():
         try:
-            df = readers[fmt](files)
-            result.frames[fmt] = df
-            result.metadata.append(
-                {"format": fmt, "files": len(files), "columns": df.columns, "status": "ok"}
-            )
+            df, n_read = readers[fmt](files), len(files)
         except Exception:  # unreadable group → per-file fallback
             readable = []
             for f in files:
@@ -250,9 +246,13 @@ def load_directory(
                     readable.append(readers[fmt](f))
                 except Exception as exc:
                     result.quarantined_files.append({"file": f, "reason": str(exc)})
-            if readable:
-                df = readable[0]
-                for one in readable[1:]:
-                    df = df.unionByName(one, allowMissingColumns=True)
-                result.frames[fmt] = df
+            if not readable:
+                continue
+            df, n_read = readable[0], len(readable)
+            for one in readable[1:]:
+                df = df.unionByName(one, allowMissingColumns=True)
+        result.frames[fmt] = df
+        result.metadata.append(
+            {"format": fmt, "files": n_read, "columns": df.columns, "status": "ok"}
+        )
     return result

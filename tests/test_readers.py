@@ -91,7 +91,8 @@ def test_load_directory_mixed(spark, tmp_path):
 
 def test_load_directory_fallback_keeps_every_readable_file(spark, tmp_path):
     """One unreadable file fails the group read; the per-file fallback
-    loads every other file of the format and quarantines only the bad
+    loads every other file of the format, records the group's metadata
+    with the count of files it read, and quarantines only the bad
     one."""
     raw = tmp_path / "raw"
     raw.mkdir()
@@ -112,6 +113,8 @@ def test_load_directory_fallback_keeps_every_readable_file(spark, tmp_path):
         "c_GBPUSD",
     }
     assert [q["file"] for q in res.quarantined_files] == [str(raw / "a_bad.parquet")]
+    assert [(m["format"], m["files"]) for m in res.metadata] == [("parquet", 2)]
+    assert res.metadata[0]["columns"] == df.columns
 
 
 def test_read_json_with_corrupt_rows(spark, tmp_path):

@@ -5,6 +5,7 @@ tests/test_phase7_export.py).
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 from datetime import datetime, timedelta
@@ -126,6 +127,75 @@ def test_content_hash_changes_with_data(spark):
     h1 = content_hash(c5, ["SYMBOL"], validate_for_export(c5))
     h2 = content_hash(c6, ["SYMBOL"], validate_for_export(c6))
     assert h1 != h2 and len(h1) == 64
+
+
+def _two_symbols(spark, n=6):
+    return _candles(spark, n, sym="AAA").unionByName(_candles(spark, n, sym="BBB"))
+
+
+def test_content_hash_does_not_depend_on_partitioning(spark):
+    """The hashed head is the earliest (TIMESTAMP, SYMBOL) rows, not
+    whatever the first partition holds."""
+    df = _two_symbols(spark)
+    val = validate_for_export(df)
+    layouts = [
+        df.coalesce(1),
+        df.repartition(3, "TIMESTAMP"),
+        df.orderBy(F.desc("TIMESTAMP")).coalesce(1),
+    ]
+    hashes = {content_hash(d, ["TIMESTAMP", "SYMBOL"], val) for d in layouts}
+    assert len(hashes) == 1
+
+
+def test_validate_counts_duplicates_per_symbol(spark):
+    """Stamps shared by different symbols are not duplicates; a repeated
+    (SYMBOL, TIMESTAMP) is. Without SYMBOL the whole output is one key."""
+    df = _two_symbols(spark)
+    assert validate_for_export(df)["duplicate_timestamps"] == 0
+    repeated = df.unionByName(df.filter(F.col("SYMBOL") == "AAA").limit(1))
+    assert validate_for_export(repeated)["duplicate_timestamps"] == 1
+    assert validate_for_export(df.drop("SYMBOL"))["duplicate_timestamps"] == 6
+
+
+def test_export_delta_encodes_timestamps_and_reads_back(spark, tmp_path):
+    """Exported files carry v2 data pages with a DELTA_BINARY_PACKED
+    TIMESTAMP in every row group, and Spark, pyarrow and DuckDB read the
+    same rows back."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    df = _two_symbols(spark, 30)
+    out = str(tmp_path / "delta")
+    write_parquet_with_metadata(df, out, partition_cols=["SYMBOL", "YEAR"])
+
+    files = glob.glob(f"{out}/**/*.parquet", recursive=True)
+    assert files
+    for path in files:
+        meta = pq.ParquetFile(path).metadata
+        for g in range(meta.num_row_groups):
+            chunks = [meta.row_group(g).column(i) for i in range(meta.num_columns)]
+            ts = next(c for c in chunks if c.path_in_schema == "TIMESTAMP")
+            assert "DELTA_BINARY_PACKED" in ts.encodings, (path, ts.encodings)
+
+    cols = ["SYMBOL", "TIMESTAMP", "OPEN", "HIGH", "LOW", "CLOSE"]
+
+    def rows_of(frame):
+        return sorted(
+            tuple(r) for r in frame.select(
+                "SYMBOL", F.unix_micros("TIMESTAMP"), *cols[2:]
+            ).collect()
+        )
+
+    want = rows_of(df)
+    assert rows_of(spark.read.parquet(out)) == want
+    table = pq.read_table(out).select(cols)
+    table = table.set_column(1, "TIMESTAMP", table.column("TIMESTAMP").cast("int64"))
+    assert sorted(tuple(r.values()) for r in table.to_pylist()) == want
+    got_duck = duckdb.sql(
+        f"""SELECT SYMBOL, epoch_us(TIMESTAMP), OPEN, HIGH, LOW, CLOSE
+            FROM read_parquet('{out}/**/*.parquet', hive_partitioning = true)"""
+    ).fetchall()
+    assert sorted(got_duck) == want
 
 
 def test_append_export_log(tmp_path):
