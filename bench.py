@@ -135,10 +135,8 @@ def main() -> int:
             # query's own cost from a cold cache.
             spark.catalog.clearCache()
 
-    # Whole-pipeline rows: the fused multi-timeframe pipeline was
-    # plan-asserted (test_pipeline.py) but never TIMED as a whole.
-    # normalize → QA → 4×(repair+resample), dry_run (full compute via
-    # count, no export I/O), with symbol fusion off and on.
+    # Whole-pipeline rows: normalize → QA → 4×(repair+resample),
+    # dry_run (full compute via count, no export I/O).
     try:
         _bench_pipeline(
             spark, sf_dir, runs, heavy_sec, heavy_runs, timings, all_runs
@@ -309,13 +307,15 @@ def _sample_stats(samples: list[float]) -> dict[str, float]:
 def _bench_pipeline(
     spark, sf_dir, runs, heavy_sec, heavy_runs, timings, all_runs
 ) -> None:
-    """Time the finance pipeline end-to-end at the bench SF, fusion
-    off vs on, as `pipeline_e2e_unfused` / `pipeline_e2e_fused` rows.
+    """Time the finance pipeline end-to-end at the bench SF as the
+    `pipeline_e2e_unfused` and `pipeline_e2e_fused` rows.
+
+    run_pipeline has one partitioning path, so both rows time that path
+    on the same input; the two names stay because the registry count
+    includes both, and the second row doubles as a repeat sample.
 
     Input: an OHLCV tick frame derived once from the events table —
-    100 synthetic symbols (event_type × user bucket), which is the
-    regime symbol fusion is FOR (symbols ≳ 2× cores; the knob is
-    documented wrong for a handful of symbols)."""
+    100 synthetic symbols (event_type × user bucket)."""
     import shutil
     import tempfile
     import time as _time
@@ -345,8 +345,7 @@ def _bench_pipeline(
             .write.mode("overwrite")
             .parquet(raw)
         )
-        for fuse in (False, True):
-            name = f"pipeline_e2e_{'fused' if fuse else 'unfused'}"
+        for name in ("pipeline_e2e_unfused", "pipeline_e2e_fused"):
             samples = []
             while _needs_more(samples, runs, heavy_sec, heavy_runs):
                 spark.catalog.clearCache()
@@ -357,12 +356,10 @@ def _bench_pipeline(
                             "processed_path": os.path.join(tmp, "processed"),
                             "reports_path": os.path.join(tmp, "reports"),
                             "logs_path": os.path.join(tmp, "logs"),
-                            "quarantine_path": os.path.join(tmp, "quarantine"),
                         },
                         "resample": {"timeframes": ["5T", "15T", "1H", "1D"]},
                     }
                 )
-                cfg.performance.fuse_symbol_partitioning = fuse
                 t0 = _time.perf_counter()
                 run_pipeline(spark, cfg, dry_run=True)
                 samples.append(round(_time.perf_counter() - t0, 3))

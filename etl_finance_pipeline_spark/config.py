@@ -83,30 +83,9 @@ class ResampleConfig(BaseModel):
     extra_numeric_policy: str = "mean"  # or "sum"
 
 
-class PerformanceConfig(BaseModel):
-    """Engine-side execution knob (no reference counterpart — the
-    reference is single-threaded pandas and has nothing to tune).
-
-    fuse_symbol_partitioning: hash-partition the input by SYMBOL once,
-    up front. Every downstream distribution requirement — dedupe
-    ``groupBy(SYMBOL, TIMESTAMP)``, gap windows ``partitionBy(SYMBOL)``,
-    grid joins on (SYMBOL, ts), candle ``groupBy(SYMBOL, bucket)`` — is
-    satisfied by hash(SYMBOL) (Catalyst: HashPartitioning on a subset of
-    the clustering keys), so the whole multi-timeframe pipeline runs on
-    ONE shuffle instead of one per operator. Turn it on when distinct
-    symbols ≳ 2× cluster cores; with a handful of symbols it caps
-    parallelism at the symbol count (one hot symbol = one hot partition
-    — salting can't help here because window/dedupe semantics need the
-    whole symbol together).
-    """
-
-    fuse_symbol_partitioning: bool = False
-
-
 class PathsConfig(BaseModel):
     raw_path: str = "data/raw"
     processed_path: str = "data/processed"
-    quarantine_path: str = "data/quarantine"
     reports_path: str = "reports"
     logs_path: str = "logs"
 
@@ -120,7 +99,6 @@ class EngineConfig(BaseModel):
     gaps: GapConfig = Field(default_factory=GapConfig)
     resample: ResampleConfig = Field(default_factory=ResampleConfig)
     parquet: ParquetConfig = Field(default_factory=ParquetConfig)
-    performance: PerformanceConfig = Field(default_factory=PerformanceConfig)
 
     model_config = {"populate_by_name": True}
 

@@ -4,17 +4,17 @@ Capability parity with the reference's normalize stage
 (/root/reference/src/etl/transform/normalize.py) re-expressed for
 Spark: the rename algorithm is driver-side schema logic (it never
 touches data), dtype/datetime coercions are `try_cast`-style Catalyst
-expressions, dedupe is a ranking window, and the `df.attrs` report
+expressions, dedupe is a grouped aggregate, and the `df.attrs` report
 side-channel becomes per-row flag columns summed into a report dict.
 
 Scale notes:
  * Rename / required-column checks are O(#columns) on the driver.
- * The whole normalization report (rows, coercions, NULLed stamps)
-   is ONE wide aggregate over the frame — map-side partial
-   aggregation, no extra shuffle beyond the final 1-row reduce.
- * Keep-first dedupe is a `row_number()` window over (keys, order) —
-   one shuffle on the dedupe keys; at 100 TB this is hash-partitioned
-   by (symbol) so it scales with the number of symbols × time range.
+ * The whole normalization report (rows, coercions, NULLed stamps,
+   corrupt rows) is ONE wide aggregate over the frame — map-side
+   partial aggregation, no extra shuffle beyond the final 1-row reduce.
+ * Keep-first dedupe is a grouped ``min_by`` aggregate over the keys —
+   map-side partial combine, then one shuffle on the dedupe keys, so it
+   scales with the number of symbols × time range.
 """
 
 from __future__ import annotations
@@ -33,6 +33,7 @@ from etl_finance_pipeline_spark.config import (
     DEFAULT_REQUIRED_COLUMNS,
     PROTECTED_COLUMNS,
 )
+from etl_finance_pipeline_spark.sources.readers import CORRUPT_COL
 
 #: Canonical numeric columns coerced to double (parity:
 #: /root/reference/src/etl/transform/normalize.py:97-101).
@@ -327,9 +328,11 @@ def remove_duplicates(
     combine, and Catalyst prunes the aggregates of columns never
     referenced downstream (a single ``min_by(struct(cols), ...)``
     would block that pruning). It runs as a HASH aggregate only while
-    every buffer is fixed-width: one carried string column (the
-    pipeline's ``_source_file``) makes its min_by buffer non-mutable
-    and the plan a SortAggregate, as in ``run_pipeline``.
+    every buffer is fixed-width: one carried string column makes its
+    min_by buffer non-mutable and the plan a SortAggregate.
+    ``run_pipeline`` drops its string columns (``_source_file``,
+    ``_corrupt_record``) before the dedupe, so its dedupe is a
+    HashAggregate.
     REQUIREMENT: *order_by* must be unique within each key group
     (an ingest sequence is); on ties the per-column picks could mix
     rows. Prefer a SINGLE primitive order column: a multi-column order
@@ -387,7 +390,12 @@ def normalize_df(
     The report is ONE aggregate over the pre-dedupe frame: the row
     count plus the sum of every per-row flag the steps added
     (``_coerced_<col>``, ``_ts_was_null``, ``_ts_no_offset``); the
-    flags are dropped before the dedupe.
+    flags are dropped before the dedupe. A CSV/JSON scan's
+    ``_corrupt_record`` column (rows its schema could not hold) is
+    counted in the same aggregate as ``corrupt_rows``, and those rows
+    are dropped with the column before the dedupe; the key appears only
+    when the column does. The count parses every column, so a later
+    read of the whole frame drops exactly the rows it counted.
 
     The global time sort of the reference (normalize.py:275) is
     deliberately NOT applied here: in Spark, ordering is declared
@@ -414,6 +422,13 @@ def normalize_df(
     ]
     if naive:
         aggs.append(F.sum(F.col("_ts_no_offset").cast("long")).alias("naive"))
+    corrupt = CORRUPT_COL in out.columns
+    if corrupt:
+        # the CSV parser flags a row only by the columns a query parses;
+        # the struct makes this count parse all of them, as a read of the
+        # whole normalized frame (run_pipeline caches it) does
+        flagged = F.when(F.col(CORRUPT_COL).isNotNull(), F.struct(*out.columns))
+        aggs.append(F.count(flagged).alias("corrupt_rows"))
     row = out.agg(*aggs).collect()[0]
     if naive:
         # refine the conservative static flag from the data: all stamps
@@ -426,6 +441,9 @@ def normalize_df(
         "ts_coerced_to_null": row["ts_coerced_to_null"],
         "coercions": {k: row[k] for k in coerced},
     }
+    if corrupt:
+        report["corrupt_rows"] = row["corrupt_rows"]
+        out = out.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
 
     out = out.drop("_ts_was_null", "_ts_no_offset", *[f"_{k}" for k in coerced])
     keys = dedupe_keys or (["SYMBOL", "TIMESTAMP"] if "SYMBOL" in out.columns else ["TIMESTAMP"])

@@ -102,23 +102,13 @@ def run_pipeline(
     if not loaded.frames:
         return result
 
-    frames = []
-    for _fmt, df in loaded.frames.items():
-        frames.append(infer_symbol(df))
+    frames = [infer_symbol(df) for df in loaded.frames.values()]
     df = frames[0]
     for extra in frames[1:]:
         df = df.unionByName(extra, allowMissingColumns=True)
-
-    fuse = cfg.performance.fuse_symbol_partitioning
-    if fuse:
-        # One shuffle for the whole pipeline: hash(SYMBOL) satisfies the
-        # clustering requirement of every downstream dedupe/window/grid-
-        # join/candle-agg (see PerformanceConfig). The ingest sequence for
-        # the keep-first dedupe tiebreak must be captured BEFORE the
-        # exchange — ids assigned after a shuffle reflect fetch order,
-        # which is nondeterministic across runs.
-        df = df.withColumn("_ingest_seq", F.monotonically_increasing_id())
-        df = df.repartition("SYMBOL")
+    # infer_symbol was the scan-time path's last reader: carried further,
+    # the string would turn the dedupe's min_by into a SortAggregate
+    df = df.drop("_source_file")
 
     tz = source_tz or cfg.timezone.source_default
     norm = normalize_df(
@@ -127,15 +117,16 @@ def run_pipeline(
         required_columns=cfg.schema_.required_columns,
         source_tz=tz,
         target_tz=cfg.timezone.target,
-        dedupe_order=["_ingest_seq"] if fuse else None,
     )
     result.reports["normalization"] = norm.report
     log.info("normalize: %s", norm.report)
-    norm_df = norm.df.drop("_ingest_seq") if fuse else norm.df
-    # ≥2 actions read this frame (DQ collect + per-timeframe outputs);
-    # the persisted layout keeps the symbol partitioning, so cached
-    # reuse skips both the recompute AND the exchange.
-    with scoped_persist(norm_df) as norm_df:
+    # ≥2 actions read this frame (DQ collect + per-timeframe outputs).
+    # It is cached hash-partitioned by SYMBOL, which meets every lane's
+    # distribution requirement (gap windows, grid joins and candle
+    # aggregates all key on SYMBOL first), so cached reads skip both the
+    # recompute and any lane-side exchange. The exchange sits after the
+    # dedupe so normalize's report aggregate still reads the raw scan.
+    with scoped_persist(norm.df.repartition("SYMBOL")) as norm_df:
         _fan_out(spark, cfg, norm_df, dry_run, result, log)
     return result
 

@@ -53,12 +53,11 @@ def get_spark(
         .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
         # Accept subset co-partitioning in joins: a frame hash-partitioned
         # on SYMBOL joins on (SYMBOL, TIMESTAMP) without re-shuffling both
-        # sides onto the full key set. This is what lets one upfront
-        # repartition(SYMBOL) carry the entire pipeline (see
-        # PerformanceConfig.fuse_symbol_partitioning); when inputs aren't
-        # already subset-partitioned the conf changes nothing. Trade-off:
-        # join parallelism = cardinality of the subset key, which is the
-        # explicit contract of the fuse knob.
+        # sides onto the full key set. This is what lets run_pipeline's
+        # cached repartition(SYMBOL) frame feed every timeframe's grid
+        # join with no exchange of its own; when inputs aren't already
+        # subset-partitioned the conf changes nothing. Trade-off: join
+        # parallelism is bounded by the subset key's cardinality.
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
         # Let AQE re-size the output partitioning of CACHED plans by
         # MEASURED bytes (default false keeps the static

@@ -7,10 +7,12 @@ Spark-first:
    recovered with ``input_file_name()``. The reference's per-file loop
    (extractor.py:18-61) would serialize a 100 TB directory on the
    driver.
- * Corrupt CSV rows are kept in PERMISSIVE mode under
-   ``_corrupt_record`` and split into a quarantine sink — row-level
-   dead-lettering, stronger than the reference's whole-file quarantine
-   (extractor.py:56-59), which we also keep for unreadable files.
+ * Corrupt CSV/JSON rows are kept in PERMISSIVE mode under
+   ``_corrupt_record``: ``split_quarantine`` splits them off for a
+   dead-letter sink, and ``normalize_df`` counts and drops them —
+   row-level handling, stronger than the reference's whole-file
+   quarantine (extractor.py:56-59), which we also keep for unreadable
+   files.
  * At scale pass an explicit schema: ``inferSchema`` is a full extra
    pass over the data.
 """

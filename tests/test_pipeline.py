@@ -32,7 +32,6 @@ def _cfg(tmp_path, timeframes):
                 "processed_path": str(tmp_path / "processed"),
                 "reports_path": str(tmp_path / "reports"),
                 "logs_path": str(tmp_path / "logs"),
-                "quarantine_path": str(tmp_path / "quarantine"),
             },
             "resample": {"timeframes": timeframes},
         }
@@ -208,17 +207,98 @@ def test_symbol_fusion_single_exchange(spark):
     assert fused == unfused and len(fused) > 0
 
 
-def test_pipeline_fused_matches_default(spark, tmp_path):
-    """run_pipeline with fuse_symbol_partitioning+cache produces the
-    same dry-run row counts and DQ report as the default config."""
-    _write_raw(tmp_path)
-    base = _cfg(tmp_path, ["5T"])
-    r1 = run_pipeline(spark, base, dry_run=True)
-    fused_cfg = _cfg(tmp_path, ["5T"])
-    fused_cfg.performance.fuse_symbol_partitioning = True
-    r2 = run_pipeline(spark, fused_cfg, dry_run=True)
-    assert r1.reports["dry_run_5m"] == r2.reports["dry_run_5m"]
-    assert r1.reports["data_quality"] == r2.reports["data_quality"]
+def _above_cache_scans(plan: str) -> str:
+    """*plan*'s tree string without the cached plans printed under each
+    InMemoryTableScan, i.e. only the operators a read of the cache runs."""
+    kept, skip_deeper_than = [], None
+    for line in plan.splitlines():
+        indent = len(line) - len(line.lstrip(" :+-"))
+        if skip_deeper_than is not None and indent > skip_deeper_than:
+            continue
+        skip_deeper_than = indent if "InMemoryTableScan" in line else None
+        kept.append(line)
+    return "\n".join(kept)
+
+
+def test_pipeline_one_partitioning_path(spark, tmp_path, monkeypatch):
+    """run_pipeline caches the normalized frame hash-partitioned by
+    SYMBOL: its dedupe is a HashAggregate (no scan-time string columns
+    are carried into it), and no timeframe lane adds a hash exchange of
+    its own above the cache."""
+    import re
+
+    from etl_finance_pipeline_spark.plans import pipeline
+
+    real_persist = pipeline.scoped_persist
+    persisted: list[tuple[list[str], str]] = []
+
+    def spy_persist(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        persisted.append((df.columns, plan))
+        return real_persist(df)
+
+    monkeypatch.setattr(pipeline, "scoped_persist", spy_persist)
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    for i, sym in enumerate(("EURUSD", "GBPUSD", "USDJPY")):
+        lines = ["time,open,high,low,close,volume"]
+        for m, o in [(0, 1.0), (1, 1.1), (1, 9.9), (2, 1.2), (5, 1.5)]:
+            o += i
+            lines.append(f"2024-01-02 09:0{m}:00,{o},{o + 0.1},{o - 0.1},{o},100")
+        (raw / f"{sym}_2024.csv").write_text("\n".join(lines) + "\n")
+    run_pipeline(spark, _cfg(tmp_path, ["1T", "5T"]), dry_run=False)
+
+    (norm_cols, norm_plan), *lanes = persisted
+    assert len(lanes) == 2
+    assert "HashAggregate" in norm_plan and "SortAggregate" not in norm_plan, norm_plan
+    assert "_source_file" not in norm_cols and "_corrupt_record" not in norm_cols
+    injected = re.compile(r"Exchange hashpartitioning[^\n]*ENSURE_REQUIREMENTS")
+    for _, plan in lanes:
+        assert "InMemoryTableScan" in plan, plan
+        assert not injected.search(_above_cache_scans(plan)), plan
+
+
+@pytest.mark.parametrize("bad_col", ["volume", "trades"])
+def test_run_pipeline_drops_corrupt_csv_rows(spark, tmp_path, monkeypatch, bad_col):
+    """A CSV row the sampled schema cannot hold (a fractional value in
+    the 9th file, past the 8-file schema sample that types the column as
+    int) is counted as corrupt_rows and dropped before the dedupe,
+    instead of entering it with a NULL; the rows counted are exactly the
+    rows dropped, also when the fault is in a column the report does not
+    otherwise read (``trades``)."""
+    from etl_finance_pipeline_spark.plans import pipeline
+
+    real_persist = pipeline.scoped_persist
+    persisted = []
+
+    def spy_persist(df):
+        persisted.append(df)
+        return real_persist(df)
+
+    monkeypatch.setattr(pipeline, "scoped_persist", spy_persist)
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    for i in range(1, 10):
+        lines = ["time,open,high,low,close,volume,trades"]
+        for m in range(5):
+            vals = {"volume": "100", "trades": "7"}
+            if (i, m) == (9, 2):
+                vals[bad_col] = "100.5"
+            lines.append(
+                f"2024-01-02 09:0{m}:00,{i},{i + 0.5},{i - 0.5},{i},"
+                f"{vals['volume']},{vals['trades']}"
+            )
+        (raw / f"SYM{i}_2024.csv").write_text("\n".join(lines) + "\n")
+    res = run_pipeline(spark, _cfg(tmp_path, ["1T"]), dry_run=True)
+
+    report = res.reports["normalization"]
+    assert report["rows_before_dedupe"] == 45
+    assert report["corrupt_rows"] == 1
+    assert report["coercions"]["coerced_VOLUME"] == 0
+    kept = persisted[0].collect()
+    assert len(kept) == report["rows_before_dedupe"] - report["corrupt_rows"]
+    assert ("SYM9", 2) not in {(r["SYMBOL"], r["TIMESTAMP"].minute) for r in kept}
+    assert {(r["VOLUME"], r["trades"]) for r in kept} == {(100.0, 7)}
 
 
 def test_pipeline_transactional_sink(spark, tmp_path):
