@@ -4,14 +4,14 @@ Many plans hold two to five INDEPENDENT pieces of work — eager
 checkpoints, serial driver-round trainings, per-timeframe writes — each
 of which leaves most executors idle between its small jobs. Running
 them side by side lets one lane's tasks back-fill another's gaps.
-:func:`overlap` is the one place that does it; :func:`scoped_persist`
-holds a frame cached for the actions of one block and always releases
-it.
+:func:`overlap` is the one place that does it: every lane it is given
+gets its own thread and starts at once, so a caller passes a handful of
+lanes, not one per row. :func:`scoped_persist` holds a frame cached for
+the actions of one block and always releases it.
 """
 
 from __future__ import annotations
 
-import threading
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 from typing import Any, Callable, Iterator
@@ -20,15 +20,6 @@ from py4j.clientserver import ClientServer
 from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
-
-#: lanes in flight at once: enough to fill a straggler tail without
-#: the lanes contending for executors
-_WIDTH = 3
-
-
-class _Skipped(Exception):
-    """A lane that never started because an earlier lane failed."""
-
 
 def _inherit(thunk: Callable[[], Any]) -> Callable[[], Any]:
     """*thunk* wrapped to run under a copy of the caller's Spark local
@@ -63,30 +54,15 @@ def _inherit(thunk: Callable[[], Any]) -> Callable[[], Any]:
 
 
 def overlap(*thunks: Callable[[], Any]) -> list:
-    """Run *thunks* on at most three threads; return their results in
-    argument order.
+    """Start every thunk at once, each on its own thread; return their
+    results in argument order.
 
-    If a lane raises, lanes not yet started are skipped, running lanes
-    finish, and the first failure in argument order is re-raised.
+    If a lane raises, every other lane still runs to its end, then the
+    first failure in argument order is re-raised.
     """
-    failed = threading.Event()
-
-    def lane(thunk: Callable[[], Any]) -> Any:
-        if failed.is_set():
-            raise _Skipped
-        try:
-            return thunk()
-        except BaseException:
-            failed.set()
-            raise
-
-    with ThreadPoolExecutor(max_workers=max(1, min(len(thunks), _WIDTH))) as pool:
-        futures = [pool.submit(lane, _inherit(t)) for t in thunks]
-    # leaving the pool waited for every started lane
-    for f in futures:
-        err = f.exception()
-        if err is not None and not isinstance(err, _Skipped):
-            raise err
+    with ThreadPoolExecutor(max_workers=max(1, len(thunks))) as pool:
+        futures = [pool.submit(_inherit(t)) for t in thunks]
+    # leaving the pool waited for every lane
     return [f.result() for f in futures]
 
 

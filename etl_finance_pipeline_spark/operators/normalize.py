@@ -10,8 +10,10 @@ side-channel becomes per-row flag columns summed into a report dict.
 Scale notes:
  * Rename / required-column checks are O(#columns) on the driver.
  * The whole normalization report (rows, coercions, NULLed stamps,
-   corrupt rows) is ONE wide aggregate over the frame — map-side
-   partial aggregation, no extra shuffle beyond the final 1-row reduce.
+   corrupt rows) is ONE set of observed metrics on the pre-dedupe
+   frame (``DataFrame.observe``): the first action that reads the
+   normalized frame computes it in passing, with no scan or job of its
+   own.
  * Keep-first dedupe is a grouped ``min_by`` aggregate over the keys —
    map-side partial combine, then one shuffle on the dedupe keys, so it
    scales with the number of symbols × time range.
@@ -21,10 +23,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta, timezone
-from typing import Iterable
+from typing import Callable, Iterable
 from zoneinfo import ZoneInfo
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -372,8 +374,31 @@ def remove_duplicates(
 
 @dataclass
 class NormalizeResult:
+    """The normalized frame and its report, observed on the first action
+    that reads ``df`` (see :func:`normalize_df`)."""
+
     df: DataFrame
-    report: dict = field(default_factory=dict)
+    _observation: Observation = field(repr=False)
+    #: turns the observed metrics into the report dict
+    _build: Callable[[dict], dict] = field(repr=False)
+    _report: dict | None = field(default=None, repr=False)
+
+    @property
+    def report(self) -> dict:
+        """The report; if no action has read ``df`` yet, one ``count()``
+        of ``df`` computes it, so reading it never waits for an action
+        that may not come."""
+        if self._report is None:
+            done = self._observation._jo.future().isCompleted
+            if not done():
+                # an action that has returned already posted its end
+                # event; the observation completes once the listener bus
+                # delivers it
+                self.df.sparkSession.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+            if not done():
+                self.df.count()
+            self._report = self._build(self._observation.get)
+        return self._report
 
 
 def normalize_df(
@@ -387,15 +412,21 @@ def normalize_df(
 ) -> NormalizeResult:
     """rename → validate → coerce dtypes → datetime/tz → dedupe.
 
-    The report is ONE aggregate over the pre-dedupe frame: the row
-    count plus the sum of every per-row flag the steps added
-    (``_coerced_<col>``, ``_ts_was_null``, ``_ts_no_offset``); the
-    flags are dropped before the dedupe. A CSV/JSON scan's
-    ``_corrupt_record`` column (rows its schema could not hold) is
-    counted in the same aggregate as ``corrupt_rows``, and those rows
-    are dropped with the column before the dedupe; the key appears only
-    when the column does. The count parses every column, so a later
-    read of the whole frame drops exactly the rows it counted.
+    Runs no action. The report is ONE aggregate, observed
+    (``DataFrame.observe``) on the pre-dedupe frame: the row count plus
+    the sum of every per-row flag the steps added (``_coerced_<col>``,
+    ``_ts_was_null``, ``_ts_no_offset``). The first action that reads
+    ``NormalizeResult.df`` computes it while it scans the input, so a
+    caller that runs such an action (``run_pipeline`` fills its cache)
+    gets the report without a scan of its own; reading ``.report``
+    before any action costs one ``count()``. The flags are dropped
+    before the dedupe. A CSV/JSON scan's ``_corrupt_record`` column
+    (rows its schema could not hold) is counted in the same aggregate
+    as ``corrupt_rows``, and those rows are dropped with the column
+    before the dedupe; the key appears only when the column does. The
+    count parses every column, in every query that reads the result, so
+    the rows it counts are exactly the rows dropped, whichever columns
+    that query reads.
 
     The global time sort of the reference (normalize.py:275) is
     deliberately NOT applied here: in Spark, ordering is declared
@@ -425,30 +456,35 @@ def normalize_df(
     corrupt = CORRUPT_COL in out.columns
     if corrupt:
         # the CSV parser flags a row only by the columns a query parses;
-        # the struct makes this count parse all of them, as a read of the
-        # whole normalized frame (run_pipeline caches it) does
+        # the struct makes this count parse all of them, and since it is
+        # observed below the filter, so does every read of the result
         flagged = F.when(F.col(CORRUPT_COL).isNotNull(), F.struct(*out.columns))
         aggs.append(F.count(flagged).alias("corrupt_rows"))
-    row = out.agg(*aggs).collect()[0]
-    if naive:
-        # refine the conservative static flag from the data: all stamps
-        # carried explicit offsets -> no UTC assumption was actually
-        # made (reference tz-aware-index parity)
-        tz_report["needs_review"] = bool((row["naive"] or 0) > 0)
-    report = {
-        "timezone": tz_report,
-        "rows_before_dedupe": row["rows_before"],
-        "ts_coerced_to_null": row["ts_coerced_to_null"],
-        "coercions": {k: row[k] for k in coerced},
-    }
-    if corrupt:
-        report["corrupt_rows"] = row["corrupt_rows"]
-        out = out.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
+    observation = Observation()
+    out = out.observe(observation, *aggs)
 
+    def build(row: dict) -> dict:
+        if naive:
+            # refine the conservative static flag from the data: all
+            # stamps carried explicit offsets -> no UTC assumption was
+            # actually made (reference tz-aware-index parity)
+            tz_report["needs_review"] = bool((row["naive"] or 0) > 0)
+        report = {
+            "timezone": tz_report,
+            "rows_before_dedupe": row["rows_before"],
+            "ts_coerced_to_null": row["ts_coerced_to_null"],
+            "coercions": {k: row[k] for k in coerced},
+        }
+        if corrupt:
+            report["corrupt_rows"] = row["corrupt_rows"]
+        return report
+
+    if corrupt:
+        out = out.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     out = out.drop("_ts_was_null", "_ts_no_offset", *[f"_{k}" for k in coerced])
     keys = dedupe_keys or (["SYMBOL", "TIMESTAMP"] if "SYMBOL" in out.columns else ["TIMESTAMP"])
     out = remove_duplicates(out, keys, dedupe_order)
-    return NormalizeResult(df=out, report=report)
+    return NormalizeResult(df=out, _observation=observation, _build=build)
 
 
 def snapshot_diff(

@@ -4,9 +4,12 @@ composed from lazy operators:
 
   load (directory scan, quarantine)
     → normalize (rename / dtypes / tz policy / keep-first dedupe)
-    → data-quality report
-    → per timeframe: gap repair AT the target frequency → resample
-    → validated partitioned parquet export + sidecar + NDJSON log
+    → one count() fills the SYMBOL-partitioned normalized cache; it is
+      the only scan of the raw input, and the normalize report is
+      observed on it
+    → all at once, over the cache: the data-quality report, and per
+      timeframe gap repair AT the target frequency → resample →
+      validated partitioned parquet export + sidecar + NDJSON log
 
 Key architectural translation (SURVEY §7.1): the reference loops one
 file at a time on one core; here ALL files/symbols live in one
@@ -118,15 +121,18 @@ def run_pipeline(
         source_tz=tz,
         target_tz=cfg.timezone.target,
     )
-    result.reports["normalization"] = norm.report
-    log.info("normalize: %s", norm.report)
-    # ≥2 actions read this frame (DQ collect + per-timeframe outputs).
+    # ≥3 actions read this frame (the fill below, the DQ collect and the
+    # per-timeframe outputs).
     # It is cached hash-partitioned by SYMBOL, which meets every lane's
     # distribution requirement (gap windows, grid joins and candle
     # aggregates all key on SYMBOL first), so cached reads skip both the
-    # recompute and any lane-side exchange. The exchange sits after the
-    # dedupe so normalize's report aggregate still reads the raw scan.
+    # recompute and any lane-side exchange.
     with scoped_persist(norm.df.repartition("SYMBOL")) as norm_df:
+        # the one scan of the raw input: it fills the cache before any
+        # lane reads it, and normalize's report is observed on it
+        norm_df.count()
+        result.reports["normalization"] = norm.report
+        log.info("normalize: %s", norm.report)
         _fan_out(spark, cfg, norm_df, dry_run, result, log)
     return result
 
@@ -139,13 +145,15 @@ def _fan_out(
     result: PipelineResult,
     log: logging.Logger,
 ) -> None:
-    """DQ report over the normalized frame, then one gap-repair →
-    resample → export lane per timeframe, the lanes overlapped."""
-    dq = data_quality_report(norm_df, ["SYMBOL"])
-    result.reports["data_quality"] = [r.asDict() for r in dq.collect()]
-    os.makedirs(cfg.paths.reports_path, exist_ok=True)
-    with open(os.path.join(cfg.paths.reports_path, "dq_report.json"), "w") as fh:
-        json.dump(result.reports["data_quality"], fh, indent=2, default=str)
+    """The DQ report and one gap-repair → resample → export lane per
+    timeframe over the filled cache, all started at once."""
+
+    def quality() -> None:
+        dq = data_quality_report(norm_df, ["SYMBOL"])
+        result.reports["data_quality"] = [r.asDict() for r in dq.collect()]
+        os.makedirs(cfg.paths.reports_path, exist_ok=True)
+        with open(os.path.join(cfg.paths.reports_path, "dq_report.json"), "w") as fh:
+            json.dump(result.reports["data_quality"], fh, indent=2, default=str)
 
     def plan(tf: str | None) -> DataFrame:
         # no timeframes: raw path, repair at hardcoded 1T and no
@@ -168,15 +176,16 @@ def _fan_out(
             extra_numeric_policy=cfg.resample.extra_numeric_policy,
         )
 
-    # Each timeframe is an INDEPENDENT lane over the same cached
-    # normalized frame: it builds its own plan, so planning overlaps
-    # too, and the next lane's tasks back-fill executors freed by the
-    # current lane's straggler tail. The DQ collect above already
-    # materialized the cache, so concurrent first-use cannot duplicate
-    # the upstream compute. Each lane runs under a copy of this
-    # thread's job group, so its own description labels only its own
-    # jobs. Each write is logged as soon as it commits, so a failed
-    # sibling cannot drop it from the audit trail.
+    # The DQ report and each timeframe are INDEPENDENT lanes over the
+    # same cached normalized frame: each builds its own plan, so
+    # planning overlaps too, and one lane's tasks back-fill executors
+    # freed by another's straggler tail. run_pipeline's count() already
+    # filled the cache, so concurrent first use cannot duplicate the
+    # upstream compute. Each lane runs under a copy of this thread's job
+    # group, so its own description labels only its own jobs. Each write
+    # is logged as soon as it commits, and a failed lane stops no other
+    # lane, so a failed sibling (the DQ report included) cannot drop a
+    # commit from the audit trail; its error is re-raised afterwards.
     log_lock = threading.Lock()
 
     def emit(suffix: str, tf: str | None) -> tuple[dict | None, str | None]:
@@ -231,7 +240,7 @@ def _fan_out(
 
     timeframes = cfg.resample.timeframes or []
     lanes = [(f"_{tf_label(tf)}", tf) for tf in timeframes] or [("_raw", None)]
-    emitted = overlap(*[partial(emit, suffix, tf) for suffix, tf in lanes])
+    _, *emitted = overlap(quality, *[partial(emit, suffix, tf) for suffix, tf in lanes])
     for (suffix, _), (dry_report, out_path) in zip(lanes, emitted):
         if dry_report is not None:
             result.reports[f"dry_run{suffix}"] = dry_report

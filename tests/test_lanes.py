@@ -1,5 +1,6 @@
-"""functions/lanes.overlap: argument-order results, skip-on-failure, and
-lane jobs labelled with the caller's job group and their own call site."""
+"""functions/lanes.overlap: every lane starts at once, argument-order
+results, every lane finishes before a failure is re-raised, and lane jobs
+are labelled with the caller's job group and their own call site."""
 
 from __future__ import annotations
 
@@ -26,12 +27,31 @@ def test_results_come_back_in_argument_order(spark):
     assert finished == [2, 1, 0]
 
 
-def test_failure_skips_unstarted_lanes_and_reraises(spark):
+def test_every_lane_starts_at_once(spark):
+    """Five lanes meet at one barrier: none can pass it until all five
+    are running."""
+    barrier = threading.Barrier(5, timeout=10)
+
+    def lane(i: int):
+        def run():
+            barrier.wait()
+            return i
+
+        return run
+
+    assert overlap(*[lane(i) for i in range(5)]) == [0, 1, 2, 3, 4]
+
+
+def test_failure_waits_for_every_lane_and_reraises(spark):
     lock = threading.Lock()
     started, ended = set(), set()
 
-    def fail():
-        raise ValueError("lane 0 failed")
+    def fail(i: int, delay: float):
+        def run():
+            time.sleep(delay)
+            raise ValueError(f"lane {i} failed")
+
+        return run
 
     def slow(i: int):
         def run():
@@ -44,11 +64,12 @@ def test_failure_skips_unstarted_lanes_and_reraises(spark):
 
         return run
 
+    # lane 3 fails first in time; lane 0 comes first in argument order
     with pytest.raises(ValueError, match="lane 0 failed"):
-        overlap(fail, slow(1), slow(2), slow(3), slow(4))
-    assert not started & {3, 4}
-    # every lane that started had finished before the error surfaced
-    assert started == ended
+        overlap(fail(0, 0.1), slow(1), slow(2), fail(3, 0.0), slow(4))
+    # a failure stops no other lane: every lane ran to its end before
+    # the error surfaced
+    assert started == ended == {1, 2, 4}
 
 
 def test_lane_jobs_carry_the_callers_job_group(spark):

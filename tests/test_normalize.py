@@ -170,7 +170,10 @@ def test_normalize_df_composition(spark):
 
 def test_normalize_df_report_is_one_action(spark, monkeypatch):
     """The whole report (rows, timestamp and numeric coercions, the
-    offset-less refinement of needs_review) comes from one collect."""
+    offset-less refinement of needs_review) is one aggregate observed on
+    the first action over the result: normalize_df itself runs no
+    action, ``.report`` on a frame no action has touched costs exactly
+    one, and ``.report`` after an action over ``res.df`` starts no job."""
     df = spark.createDataFrame(
         [
             ("EURUSD", "2024-01-01 00:00:00", "1.10", 1),
@@ -181,18 +184,7 @@ def test_normalize_df_report_is_one_action(spark, monkeypatch):
         ],
         ["SYMBOL", "time", "open", "seq"],
     ).withColumns({c: F.lit(1.0) for c in ("high", "low", "close")})
-    frame_cls = type(df)  # the concrete (classic) DataFrame class
-    real_collect = frame_cls.collect
-    calls = []
-
-    def counting_collect(self):
-        calls.append(self)
-        return real_collect(self)
-
-    monkeypatch.setattr(frame_cls, "collect", counting_collect)
-    res = normalize_df(df, dedupe_order=[F.col("seq")])
-    assert len(calls) == 1
-    assert res.report == {
+    expected = {
         "timezone": {
             "needs_review": True,  # offset-less stamps were assumed UTC
             "source_tz": "UTC(assumed)",
@@ -207,7 +199,47 @@ def test_normalize_df_report_is_one_action(spark, monkeypatch):
             "coerced_CLOSE": 0,
         },
     }
+    frame_cls = type(df)  # the concrete (classic) DataFrame class
+    calls = []
+    for name in ("collect", "count"):
+
+        def counting(self, _real=getattr(frame_cls, name), _name=name):
+            calls.append(_name)
+            return _real(self)
+
+        monkeypatch.setattr(frame_cls, name, counting)
+    sc = spark.sparkContext
+    groups = iter(range(3))
+
+    def jobs_of(thunk):
+        """(result, Spark jobs started) of *thunk* under its own job group."""
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        group = f"normalize-report-{next(groups)}"
+        sc.setJobGroup(group, "normalize report test")
+        try:
+            out = thunk()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    res, jobs = jobs_of(lambda: normalize_df(df, dedupe_order=[F.col("seq")]))
+    assert jobs == 0 and calls == []  # normalize_df runs no action
+    report, jobs = jobs_of(lambda: res.report)
+    assert calls == ["count"] and jobs > 0  # one action computes it
+    assert report == expected
+    assert res.report is report  # read once, kept
     assert not any(c.startswith(("_coerced_", "_ts_")) for c in res.df.columns)
+
+    # an action over the result observes the report in passing
+    res = normalize_df(df, dedupe_order=[F.col("seq")])
+    # one row per (SYMBOL, TIMESTAMP): the two NULL stamps share a key
+    assert len(res.df.collect()) == 3
+    calls.clear()
+    report, jobs = jobs_of(lambda: res.report)
+    assert jobs == 0 and calls == []
+    assert report == expected
 
 
 def test_remove_duplicates_window_strategy_equivalent(spark):

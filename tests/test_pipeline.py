@@ -299,6 +299,9 @@ def test_run_pipeline_drops_corrupt_csv_rows(spark, tmp_path, monkeypatch, bad_c
     assert len(kept) == report["rows_before_dedupe"] - report["corrupt_rows"]
     assert ("SYM9", 2) not in {(r["SYMBOL"], r["TIMESTAMP"].minute) for r in kept}
     assert {(r["VOLUME"], r["trades"]) for r in kept} == {(100.0, 7)}
+    # the observed report reads every column, so a query that reads only
+    # the keys drops the same rows
+    assert len(persisted[0].select("SYMBOL", "TIMESTAMP").collect()) == len(kept)
 
 
 def test_pipeline_transactional_sink(spark, tmp_path):
@@ -402,6 +405,132 @@ def test_run_pipeline_partial_failure_logs_committed_table_versions(
     # the first lane starts before the failing one, so it always commits
     assert committed[str(processed / "candles_1m")] == [0]
     assert committed[str(processed / "candles_5m")] == []
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached_before
+
+
+#: seed figures of the _write_raw input, identical before and after the
+#: normalize report moved onto the cache fill
+_RAW_NORMALIZATION = {
+    "timezone": {"needs_review": True, "source_tz": "UTC(assumed)", "target_tz": "UTC"},
+    "rows_before_dedupe": 5,
+    "ts_coerced_to_null": 0,
+    "coercions": {
+        "coerced_OPEN": 0,
+        "coerced_HIGH": 0,
+        "coerced_LOW": 0,
+        "coerced_CLOSE": 0,
+        "coerced_VOLUME": 0,
+    },
+    "corrupt_rows": 0,
+}
+_RAW_DQ = [
+    {
+        "SYMBOL": "EURUSD",
+        "rows": 4,
+        "start": "2024-01-02 09:00:00",
+        "end": "2024-01-02 09:05:00",
+        "duplicate_timestamps": 0,
+        "nulls_TIMESTAMP": 0,
+        "nulls_OPEN": 0,
+        "nulls_HIGH": 0,
+        "nulls_LOW": 0,
+        "nulls_CLOSE": 0,
+        "nulls_VOLUME": 0,
+        "nulls_SYMBOL": 0,
+        "mean_range": 0.20000000000000015,
+        "max_range": 0.20000000000000018,
+        "close_min": 1.0,
+        "close_max": 1.5,
+        "close_median": 1.15,
+        "suspicious_price_jump": False,
+        "SMA_10_last": 1.2,
+        "SMA_10_min": 1.0,
+        "SMA_10_max": 1.2,
+        "SMA_10_nulls": 0,
+        "SMA_50_last": 1.2,
+        "SMA_50_min": 1.0,
+        "SMA_50_max": 1.2,
+        "SMA_50_nulls": 0,
+    }
+]
+
+
+def test_run_pipeline_scans_its_input_once_before_the_lanes(spark, tmp_path, monkeypatch):
+    """normalize_df runs no action; between it and the lanes the pipeline
+    runs exactly one action, the count() that fills the normalized cache
+    and observes the normalize report; the lanes read only that cache
+    (the raw files are moved away as they start). Both reports equal
+    their pinned figures."""
+    from etl_finance_pipeline_spark.plans import pipeline
+
+    sc = spark.sparkContext
+    raw = _write_raw(tmp_path)
+    actions: list[str] = []
+    seen: dict[str, object] = {}
+    real_normalize, real_overlap = pipeline.normalize_df, pipeline.overlap
+
+    def spy_normalize(*args, **kwargs):
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        sc.setJobGroup("pipeline-normalize", "normalize_df")
+        try:
+            out = real_normalize(*args, **kwargs)
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        seen["normalize_jobs"] = len(sc.statusTracker().getJobIdsForGroup("pipeline-normalize"))
+        actions.clear()
+        return out
+
+    def spy_overlap(*lanes):
+        seen["actions_before_lanes"] = list(actions)
+        raw.rename(tmp_path / "raw_moved")  # a lane that reads the input fails
+        return real_overlap(*lanes)
+
+    frame_cls = type(spark.range(1))
+    for name in ("collect", "count"):
+
+        def counting(self, _real=getattr(frame_cls, name), _name=name):
+            actions.append(_name)
+            return _real(self)
+
+        monkeypatch.setattr(frame_cls, name, counting)
+    monkeypatch.setattr(pipeline, "normalize_df", spy_normalize)
+    monkeypatch.setattr(pipeline, "overlap", spy_overlap)
+    res = run_pipeline(spark, _cfg(tmp_path, ["1T", "5T"]), dry_run=False)
+
+    assert seen == {"normalize_jobs": 0, "actions_before_lanes": ["count"]}
+    assert res.reports["normalization"] == _RAW_NORMALIZATION
+    assert json.load(open(tmp_path / "reports" / "dq_report.json")) == _RAW_DQ
+    assert sorted(os.path.basename(p) for p in res.outputs) == ["candles_1m", "candles_5m"]
+
+
+def test_run_pipeline_dq_failure_still_exports_and_logs(spark, tmp_path, monkeypatch):
+    """The DQ report is one lane among the timeframes: when it fails,
+    every timeframe is still written and logged, the DQ error is
+    re-raised afterwards, and no cached block is left behind."""
+    from etl_finance_pipeline_spark.plans import pipeline
+
+    def failing_report(*args, **kwargs):
+        raise RuntimeError("injected data-quality failure")
+
+    monkeypatch.setattr(pipeline, "data_quality_report", failing_report)
+    _write_raw(tmp_path)
+    cached_before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="injected data-quality"):
+        run_pipeline(spark, _cfg(tmp_path, ["1T", "5T", "15T"]), dry_run=False)
+
+    processed = tmp_path / "processed"
+    outputs = {str(processed / f"candles_{tf}") for tf in ("1m", "5m", "15m")}
+    sidecars = {
+        str(processed / name[: -len(".meta.json")])
+        for name in os.listdir(processed)
+        if name.endswith(".meta.json")
+    }
+    log = (tmp_path / "logs" / "export_log.ndjson").read_text().splitlines()
+    assert sidecars == outputs
+    assert sorted(json.loads(line)["output"] for line in log) == sorted(outputs)
+    assert not (tmp_path / "reports" / "dq_report.json").exists()
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached_before
 
 
