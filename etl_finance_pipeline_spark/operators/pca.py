@@ -199,21 +199,6 @@ def pca_fit(
     return loadings, eig, means
 
 
-def pca_power_top_component(
-    cov: DataFrame, iters: int = 8
-) -> tuple[list[float], float]:
-    """Dominant eigenvector of a collected (i, j, cov) frame via a
-    FIXED-iteration power method — deterministic control flow the
-    DuckDB oracle unrolls verbatim: v₀ = 1/√d, then *iters* rounds of
-    v ← Cv / ‖Cv‖₂, final sign fixed so v[0] ≥ 0. Returns (loadings,
-    eigenvalue = vᵀCv). The matrix is a dim-table (d² doubles) — this
-    is driver control flow, same contract as the k-means codebook
-    collects."""
-    rows = cov.collect()
-    d = max(r["i"] for r in rows)
-    return _power_iterate(rows, d, iters)
-
-
 def _power_iterate(
     rows, d: int, iters: int, round_digits: int | None = 6
 ) -> tuple[list[float], float]:

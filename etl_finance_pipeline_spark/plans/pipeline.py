@@ -200,39 +200,17 @@ def _fan_out(
         # this lane's output: persist it so the repair → resample chain
         # runs once and the other two read the cache
         with scoped_persist(frame) as frame:
-            if cfg.parquet.transactional:
-                # commit-log sink: same validation, then an atomic
-                # append — a crashed run leaves no visible partial output
-                # and concurrent readers keep seeing the previous snapshot
-                from etl_finance_pipeline_spark.sources.exporter import (
-                    derive_partition_columns,
-                    validate_for_export,
-                )
-                from etl_finance_pipeline_spark.sources.table_format import (
-                    write_table,
-                )
-
-                validation = validate_for_export(frame)
-                out_frame, resolved = derive_partition_columns(
-                    frame, cfg.parquet.partition_cols
-                )
-                snap = write_table(
-                    out_frame, out_path, mode="append", partition_by=resolved
-                )
-                log_entry = {
-                    "output": out_path,
-                    "table_version": snap.version,
-                    **validation,
-                }
-            else:
-                report = write_parquet_with_metadata(
-                    frame,
-                    out_path,
-                    compression=cfg.parquet.compression,
-                    partition_cols=cfg.parquet.partition_cols,
-                    metadata={"timeframe": suffix.lstrip("_")},
-                )
-                log_entry = {"output": out_path, **report["validation"]}
+            report = write_parquet_with_metadata(
+                frame,
+                out_path,
+                compression=cfg.parquet.compression,
+                partition_cols=cfg.parquet.partition_cols,
+                metadata={"timeframe": suffix.lstrip("_")},
+                transactional=cfg.parquet.transactional,
+            )
+        # a transactional row also names the version it committed
+        version = {k: report[k] for k in report.keys() & {"table_version"}}
+        log_entry = {"output": out_path, **version, **report["validation"]}
         with log_lock:
             append_export_log(cfg.paths.logs_path, log_entry)
         log.info("export: wrote %s", out_path)

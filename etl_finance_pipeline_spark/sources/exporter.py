@@ -11,9 +11,9 @@ Capability parity with /root/reference/src/etl/load/exporter.py
    min/max, earliest 3 rows of the key columns) — the count and span
    reuse the validation row, so only one top-3 collect is added: O(1)
    driver data regardless of table size.
- * Writer knobs for the 100 TB path: zstd, ``maxRecordsPerFile`` to
-   bound file sizes, optional sort-within-partitions for time-ordered
-   row groups (better scan locality + min/max pruning).
+ * One sink for both pipeline sinks: plain directory Parquet, or an
+   atomic append to the transactional table format; each writes the
+   same sidecar.
 """
 
 from __future__ import annotations
@@ -25,7 +25,11 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from etl_finance_pipeline_spark.sources import table_format
+
+#: plain-sink file size bound, in rows
+MAX_RECORDS_PER_FILE = 5_000_000
 
 
 def validate_for_export(df: DataFrame, ts_col: str = "TIMESTAMP") -> dict:
@@ -69,8 +73,9 @@ def validate_for_export(df: DataFrame, ts_col: str = "TIMESTAMP") -> dict:
             ).alias("high_below_max")
         )
     row = df.agg(*aggs).collect()[0].asDict()
-    row["start"] = str(row["start"])
-    row["end"] = str(row["end"])
+    for k in ("start", "end"):  # NULL on an empty frame: stays JSON null
+        if row[k] is not None:
+            row[k] = str(row[k])
     return row
 
 
@@ -126,114 +131,49 @@ def write_parquet_with_metadata(
     compression: str = "zstd",
     partition_cols: list[str] | None = None,
     metadata: dict | None = None,
-    ts_col: str = "TIMESTAMP",
-    mode: str = "overwrite",
-    max_records_per_file: int = 5_000_000,
-    sort_within_partitions: bool = True,
+    transactional: bool = False,
 ) -> dict:
-    """Validate → derive partition cols → write partitioned zstd
-    parquet → sidecar ``<dir>.meta.json`` → return the export report
-    (S7+S8, exporter.py:128-210)."""
-    report = {"validation": validate_for_export(df, ts_col)}
-    df, resolved = derive_partition_columns(df, partition_cols or [], ts_col)
+    """Validate → derive partition cols → write → content hash → sidecar
+    ``<dir>.meta.json`` → return the export report (S7+S8,
+    exporter.py:128-210). Only the write differs by sink: the plain one
+    overwrites *out_path*, sorted by partition and time within each
+    task; the transactional one appends an atomic commit to the table at
+    *out_path* and reports its ``table_version``. The old sidecar goes
+    before the write starts, so a failed write leaves none behind."""
+    report = {"validation": validate_for_export(df)}
+    df, resolved = derive_partition_columns(df, partition_cols or [])
 
-    writer_df = df
-    if sort_within_partitions:
-        sort_cols = [c for c in (*resolved, ts_col) if c in df.columns]
-        writer_df = df.sortWithinPartitions(*sort_cols)
-
-    writer = (
-        writer_df.write.mode(mode)
-        .option("compression", compression)
-        .option("maxRecordsPerFile", max_records_per_file)
-    )
-    if resolved:
-        writer = writer.partitionBy(*resolved)
-    writer.parquet(out_path)
+    sidecar = out_path.rstrip("/") + ".meta.json"
+    if os.path.exists(sidecar):
+        os.remove(sidecar)
+    if transactional:
+        snap = table_format.write_table(
+            df, out_path, mode="append", partition_by=resolved, compression=compression
+        )
+        report["table_version"] = snap.version
+    else:
+        (
+            df.sortWithinPartitions(*resolved, "TIMESTAMP")
+            .write.mode("overwrite")
+            .option("compression", compression)
+            .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
+            .partitionBy(*resolved)
+            .parquet(out_path)
+        )
 
     report.update(
         {
             "path": out_path,
             "compression": compression,
             "partition_cols": resolved,
-            "content_hash": content_hash(
-                df, [ts_col, "SYMBOL"], report["validation"]
-            ),
+            "content_hash": content_hash(df, ["TIMESTAMP", "SYMBOL"], report["validation"]),
             "exported_at": datetime.now(timezone.utc).isoformat(),
             "user_metadata": metadata or {},
         }
     )
-    with open(out_path.rstrip("/") + ".meta.json", "w") as fh:
+    with open(sidecar, "w") as fh:
         json.dump(report, fh, indent=2, default=str)
     return report
-
-
-def overwrite_partitions(
-    df: DataFrame,
-    out_path: str,
-    partition_cols: list[str],
-    *,
-    compression: str = "zstd",
-    ts_col: str = "TIMESTAMP",
-    max_records_per_file: int = 5_000_000,
-) -> dict:
-    """Idempotent partition backfill: rewrite ONLY the Hive partitions
-    present in *df*, leaving every other partition of *out_path*
-    untouched — the re-run primitive for "reprocess yesterday" jobs
-    (a plain ``mode=overwrite`` would truncate the whole dataset; a
-    plain append would duplicate the re-run's rows).
-
-    Implemented with Spark's dynamic partition overwrite
-    (``partitionOverwriteMode=dynamic``, scoped to this write via the
-    writer option rather than a session-level config mutation).
-    Re-running the same input is a no-op on the dataset's contents —
-    the exactly-once property batch backfills need.
-
-    Returns {path, partitions_written, rows}.
-    """
-    df2, resolved = derive_partition_columns(df, partition_cols, ts_col)
-    if not resolved:
-        raise ValueError("overwrite_partitions requires partition columns")
-    parts = [
-        tuple(r) for r in df2.select(*resolved).distinct().collect()
-    ]
-    (
-        df2.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("compression", compression)
-        .option("maxRecordsPerFile", max_records_per_file)
-        .partitionBy(*resolved)
-        .parquet(out_path)
-    )
-    return {
-        "path": out_path,
-        "partitions_written": sorted(parts),
-        "rows": df2.count(),
-    }
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: list[str],
-    num_buckets: int = 64,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist *df* as a bucketed+sorted managed table — the
-    pre-partitioning recipe for repeated co-located joins: two tables
-    bucketed on the same key with the same bucket count sort-merge
-    join WITHOUT any exchange (verified in tests/test_bucketing.py).
-
-    At 100 TB: bucket the big fact tables on their join keys once at
-    ingest; every downstream join on those keys skips its shuffle.
-    """
-    writer = df.write.mode(mode).bucketBy(num_buckets, *bucket_cols)
-    if sort_cols is None:
-        sort_cols = bucket_cols
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table_name)
 
 
 def append_export_log(log_dir: str, entry: dict) -> None:

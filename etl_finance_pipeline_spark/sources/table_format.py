@@ -289,7 +289,9 @@ def _partition_values(rel_path: str) -> dict[str, str]:
     return vals
 
 
-def _stage_files(df: DataFrame, table: str, partition_by: list[str] | None) -> tuple[list[dict], str]:
+def _stage_files(
+    df: DataFrame, table: str, partition_by: list[str] | None, compression: str | None = None
+) -> tuple[list[dict], str]:
     """Write *df* as immutable parquet parts under a fresh commit dir
     and return their manifest entries (path relative to table root,
     per-file row counts from the parquet footers)."""
@@ -302,6 +304,8 @@ def _stage_files(df: DataFrame, table: str, partition_by: list[str] | None) -> t
         "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
     )
     writer = df.write.mode("error")
+    if compression:
+        writer = writer.option("compression", compression)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(data_dir)
@@ -494,6 +498,7 @@ def write_table(
     zorder_files: int | None = None,
     expectations: dict[str, str] | None = None,
     on_violation: str = "fail",
+    compression: str | None = None,
 ) -> Snapshot:
     """Commit *df* to *table* atomically. mode='append' adds files;
     mode='overwrite' logically removes every live file first (data
@@ -521,7 +526,8 @@ def write_table(
     extra passes. ``on_violation="fail"`` refuses to commit when any
     count is nonzero (staged files stay invisible; vacuum reclaims
     them); ``"drop"`` filters violating rows out and commits, with
-    per-expectation counts recorded in the manifest either way."""
+    per-expectation counts recorded in the manifest either way.
+    *compression* is the new files' codec; None keeps the session's."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     if cluster_by and zorder_by:
@@ -559,7 +565,7 @@ def write_table(
         )
     if cluster_by:
         df = df.repartitionByRange(*cluster_by).sortWithinPartitions(*cluster_by)
-    entries, commit_id = _stage_files(df, table, partition_by)
+    entries, commit_id = _stage_files(df, table, partition_by, compression)
     violation_counts: dict[str, int] = {}
     if observation is not None:
         violation_counts = {k: int(v or 0) for k, v in observation.get.items()}

@@ -22,18 +22,9 @@ import os
 from pyspark.sql import DataFrame
 
 from etl_finance_pipeline_spark.sources.table_format import (
-    history,
     last_committed_epoch,
     write_table,
 )
-
-
-def committed_batch_ids(table: str) -> set[int]:
-    """Epoch ids in the SURVIVING manifests (vacuum drops old ones) —
-    introspection/debugging only. The dedupe decision uses
-    :func:`last_committed_epoch`, which is O(checkpoint interval) and
-    survives vacuum via the checkpointed high-water mark."""
-    return {int(h["source_batch_id"]) for h in history(table) if h["source_batch_id"] is not None}
 
 
 def await_stream(q, timeout: float = 300.0) -> None:

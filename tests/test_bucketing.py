@@ -70,22 +70,3 @@ def test_unbucketed_join_does_shuffle(spark):
         assert "Exchange hashpartitioning" in plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-
-
-def test_write_bucketed_table_helper(spark):
-    from etl_finance_pipeline_spark.sources.exporter import write_bucketed_table
-
-    df = spark.range(0, 100).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
-    )
-    spark.sql("DROP TABLE IF EXISTS helper_bucketed")
-    write_bucketed_table(df, "helper_bucketed", ["k"], num_buckets=4)
-    back = spark.table("helper_bucketed")
-    assert back.count() == 100
-    # joining two instances of the bucketed table needs no exchange
-    j = back.alias("a").join(
-        spark.table("helper_bucketed").alias("b"), F.col("a.k") == F.col("b.k")
-    )
-    plan = j._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning" not in plan
-    spark.sql("DROP TABLE IF EXISTS helper_bucketed")

@@ -331,6 +331,42 @@ def test_pipeline_transactional_sink(spark, tmp_path):
     assert '"table_version": 0' in log[0] and '"table_version": 1' in log[1]
 
 
+def test_pipeline_transactional_sink_writes_sidecar_with_configured_codec(
+    spark, tmp_path
+):
+    """The transactional sink writes its files with the configured
+    codec, not the session's, and the same sidecar as the plain sink
+    plus the committed table version."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    _write_raw(tmp_path)
+    cfg = _cfg(tmp_path, ["5T"])
+    cfg.parquet.transactional = True
+    cfg.parquet.compression = "snappy"
+    out = run_pipeline(spark, cfg, dry_run=False).outputs[0]
+
+    files = glob.glob(os.path.join(out, "**", "*.parquet"), recursive=True)
+    assert files
+    codecs = set()
+    for path in files:
+        meta = pq.ParquetFile(path).metadata
+        for g in range(meta.num_row_groups):
+            group = meta.row_group(g)
+            codecs |= {group.column(i).compression for i in range(group.num_columns)}
+    assert codecs == {"SNAPPY"}
+
+    with open(out + ".meta.json") as fh:
+        sidecar = json.load(fh)
+    assert sidecar["table_version"] == 0
+    assert sidecar["compression"] == "snappy"
+    assert sidecar["user_metadata"] == {"timeframe": "5m"}
+    assert len(sidecar["content_hash"]) == 64
+    log = (tmp_path / "logs" / "export_log.ndjson").read_text().splitlines()
+    assert json.loads(log[0]) == {"output": out, "table_version": 0, **sidecar["validation"]}
+
+
 def test_run_pipeline_partial_failure_logs_committed_writes(
     spark, tmp_path, monkeypatch
 ):

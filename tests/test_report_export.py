@@ -12,6 +12,7 @@ from datetime import datetime, timedelta
 
 import pandas as pd
 import pytest
+from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 
 from etl_finance_pipeline_spark.operators.report import data_quality_report, sma
@@ -196,6 +197,42 @@ def test_export_delta_encodes_timestamps_and_reads_back(spark, tmp_path):
             FROM read_parquet('{out}/**/*.parquet', hive_partitioning = true)"""
     ).fetchall()
     assert sorted(got_duck) == want
+
+
+def test_failed_overwrite_leaves_no_stale_sidecar(spark, tmp_path):
+    """A write that fails after Spark has cleared the old output must
+    not leave the old sidecar claiming the old rows and hash."""
+    out = str(tmp_path / "out")
+    write_parquet_with_metadata(_candles(spark, 10), out)
+    with open(out + ".meta.json") as fh:
+        assert json.load(fh)["validation"]["rows"] == 10
+    # validation and the hash never read NOTE, so only the write fails
+    bad = _candles(spark, 10).withColumn("NOTE", F.raise_error(F.lit("boom")))
+    with pytest.raises(PySparkException, match="boom"):
+        write_parquet_with_metadata(bad, out)
+    assert not os.path.exists(out + ".meta.json")
+
+
+def test_empty_export_keeps_null_span(spark, tmp_path):
+    """A 0-row frame has no time span: the sidecar, the export-log row
+    and the hash payload carry JSON null, not the string "None"."""
+    import hashlib
+
+    empty = _candles(spark, 1).limit(0)
+    out = str(tmp_path / "empty")
+    rep = write_parquet_with_metadata(empty, out)
+    with open(out + ".meta.json") as fh:
+        meta = json.load(fh)
+    assert meta["validation"]["rows"] == 0
+    assert meta["validation"]["start"] is None and meta["validation"]["end"] is None
+    payload = {"rows": 0, "min": None, "max": None, "head": []}
+    want = hashlib.sha256(json.dumps(payload, sort_keys=True).encode()).hexdigest()
+    assert rep["content_hash"] == want
+    logs = str(tmp_path / "logs")
+    append_export_log(logs, {"output": out, **rep["validation"]})
+    with open(os.path.join(logs, "export_log.ndjson")) as fh:
+        row = json.loads(fh.read())
+    assert row["start"] is None and row["end"] is None
 
 
 def test_append_export_log(tmp_path):
@@ -448,37 +485,3 @@ def test_cusum_detects_level_shift(spark):
     assert out[-1]["CUSUM_LOW"] == 0.0
     assert out[-1]["CUSUM_HIGH"] > 100.0
     assert all(r["ALARM"] for r in out[-20:])
-
-
-def test_overwrite_partitions_rewrites_only_touched_days(spark, tmp_path):
-    """Dynamic partition overwrite: re-running one day replaces that
-    day's partition and leaves the others untouched — idempotent
-    backfill, no whole-dataset truncate, no duplicates."""
-    from datetime import datetime
-
-    from etl_finance_pipeline_spark.sources.exporter import (
-        overwrite_partitions,
-        write_parquet_with_metadata,
-    )
-
-    out = str(tmp_path / "ds")
-    d1, d2 = datetime(2024, 3, 1, 10), datetime(2024, 4, 1, 10)
-    base = spark.createDataFrame(
-        [("A", d1, 1.0), ("A", d2, 2.0)],
-        "SYMBOL string, TIMESTAMP timestamp, CLOSE double",
-    )
-    write_parquet_with_metadata(base, out, partition_cols=["YEAR", "MONTH"])
-    # backfill April only, with corrected data
-    fix = spark.createDataFrame(
-        [("A", d2, 99.0), ("B", d2, 98.0)],
-        "SYMBOL string, TIMESTAMP timestamp, CLOSE double",
-    )
-    rep = overwrite_partitions(fix, out, ["YEAR", "MONTH"])
-    assert rep["rows"] == 2 and rep["partitions_written"] == [(2024, 4)]
-    back = spark.read.parquet(out)
-    got = sorted((r["MONTH"], r["CLOSE"]) for r in back.collect())
-    # March untouched; April replaced (old 2.0 gone, both new rows in)
-    assert got == [(3, 1.0), (4, 98.0), (4, 99.0)]
-    # idempotence: the same backfill again changes nothing
-    overwrite_partitions(fix, out, ["YEAR", "MONTH"])
-    assert sorted((r["MONTH"], r["CLOSE"]) for r in spark.read.parquet(out).collect()) == got
