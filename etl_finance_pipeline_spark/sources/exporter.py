@@ -18,9 +18,11 @@ Capability parity with /root/reference/src/etl/load/exporter.py
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 import os
+import shutil
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame
@@ -136,37 +138,42 @@ def write_parquet_with_metadata(
     """Validate → derive partition cols → write → content hash → sidecar
     ``<dir>.meta.json`` → return the export report (S7+S8,
     exporter.py:128-210). Only the write differs by sink: the plain one
-    overwrites *out_path*, sorted by partition and time within each
-    task; the transactional one appends an atomic commit to the table at
-    *out_path* and reports its ``table_version``. The old sidecar goes
-    before the write starts, so a failed write leaves none behind."""
+    writes a sibling staging directory, sorted by partition and time
+    within each task, and swaps it in for *out_path* once it and the
+    hash succeed, so a failed export leaves the previous output and its
+    sidecar as they were; the transactional one appends an atomic commit
+    to the table at *out_path* and reports its ``table_version`` (its
+    old sidecar goes before the write starts, so a failed write leaves
+    none behind)."""
     report = {"validation": validate_for_export(df)}
     df, resolved = derive_partition_columns(df, partition_cols or [])
 
     sidecar = out_path.rstrip("/") + ".meta.json"
-    if os.path.exists(sidecar):
-        os.remove(sidecar)
     if transactional:
+        if os.path.exists(sidecar):
+            os.remove(sidecar)
         snap = table_format.write_table(
             df, out_path, mode="append", partition_by=resolved, compression=compression
         )
         report["table_version"] = snap.version
+        digest = content_hash(df, ["TIMESTAMP", "SYMBOL"], report["validation"])
     else:
-        (
-            df.sortWithinPartitions(*resolved, "TIMESTAMP")
-            .write.mode("overwrite")
-            .option("compression", compression)
-            .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
-            .partitionBy(*resolved)
-            .parquet(out_path)
-        )
-
+        with _replacing(out_path, sidecar) as staging:
+            (
+                df.sortWithinPartitions(*resolved, "TIMESTAMP")
+                .write.mode("overwrite")
+                .option("compression", compression)
+                .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
+                .partitionBy(*resolved)
+                .parquet(staging)
+            )
+            digest = content_hash(df, ["TIMESTAMP", "SYMBOL"], report["validation"])
     report.update(
         {
             "path": out_path,
             "compression": compression,
             "partition_cols": resolved,
-            "content_hash": content_hash(df, ["TIMESTAMP", "SYMBOL"], report["validation"]),
+            "content_hash": digest,
             "exported_at": datetime.now(timezone.utc).isoformat(),
             "user_metadata": metadata or {},
         }
@@ -174,6 +181,26 @@ def write_parquet_with_metadata(
     with open(sidecar, "w") as fh:
         json.dump(report, fh, indent=2, default=str)
     return report
+
+
+@contextlib.contextmanager
+def _replacing(out_path: str, sidecar: str):
+    """Yield a staging directory beside *out_path*. When the block
+    succeeds, the old sidecar and directory go and the staging
+    directory takes *out_path*'s name; when it fails, only the staging
+    directory goes. Its name starts with ``.``, so a reader of the
+    parent directory skips it."""
+    parent, name = os.path.split(out_path.rstrip("/"))
+    staging = os.path.join(parent, f".{name}.staging")
+    try:
+        yield staging
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+    if os.path.exists(sidecar):
+        os.remove(sidecar)
+    shutil.rmtree(out_path, ignore_errors=True)
+    os.rename(staging, out_path.rstrip("/"))
 
 
 def append_export_log(log_dir: str, entry: dict) -> None:

@@ -8,6 +8,8 @@ output is compared against ``tests/golden/run_pipeline.json``:
 * per timeframe: the row count, an order-insensitive row hash, the
   sidecar minus ``exported_at``/``path``, and the file count per
   partition directory;
+* for the 1m output, a second row hash over the raw doubles
+  (``EXACT_OUTPUT``);
 * the export-log rows, sorted by output;
 * ``dq_report.json`` (sorted by ``SYMBOL``) and the normalization
   report;
@@ -16,7 +18,10 @@ output is compared against ``tests/golden/run_pipeline.json``:
 
 Rows are compared, not bytes: exported Parquet footers are not
 byte-reproducible. Every double, in rows and reports alike, is rounded
-to ``SIG_DIGITS`` significant digits before it is hashed or compared.
+to ``SIG_DIGITS`` significant digits before it is hashed or compared,
+except in the 1m output's exact hash: gap repair computes each 1m row
+from its own neighbours alone, with no sum whose order a shuffle could
+change, so its doubles repeat bit for bit and a 1-ulp change shows.
 
 The golden file changes only with an intended output change. Rewrite it
 with ``PYTHONPATH=. python tests/test_golden.py`` and state in CHANGES.md
@@ -40,6 +45,7 @@ from etl_finance_pipeline_spark.plans.pipeline import run_pipeline
 HERE = os.path.dirname(os.path.abspath(__file__))
 GOLDEN = os.path.join(HERE, "golden", "run_pipeline.json")
 SIG_DIGITS = 12
+EXACT_OUTPUT = "candles_1m"
 SEED = 1
 DEEP_DAYS = 2
 WIDE_SYMBOLS, WIDE_MINUTES = 4, 1440
@@ -65,13 +71,13 @@ def _canon(obj):
     return obj
 
 
-def _row_hash(path: str) -> tuple[int, str]:
-    """Row count and sha256 over the sorted, canonical rows of one
+def _row_hash(path: str, canon=_canon) -> tuple[int, str]:
+    """Row count and sha256 over the sorted, *canon*-ical rows of one
     exported directory (Hive partition columns included)."""
     table = pq.read_table(path)
     names = sorted(table.column_names)
     rows = sorted(
-        json.dumps([_canon(r[c]) for c in names], default=str)
+        json.dumps([canon(r[c]) for c in names], default=str)
         for r in table.to_pylist()
     )
     digest = hashlib.sha256("\n".join([json.dumps(names), *rows]).encode())
@@ -126,6 +132,9 @@ def _observe(spark, raw: str, work: str) -> dict:
             "sidecar": _canon(sidecar),
             "files_per_partition": _files_per_partition(path),
         }
+        if os.path.basename(path) == EXACT_OUTPUT:
+            # json writes a float as its shortest round-trip repr
+            outputs[EXACT_OUTPUT]["exact_row_hash"] = _row_hash(path, lambda v: v)[1]
     with open(os.path.join(work, "reports", "dq_report.json")) as fh:
         dq = sorted(json.load(fh), key=lambda r: r["SYMBOL"])
     return {

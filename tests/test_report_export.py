@@ -200,17 +200,24 @@ def test_export_delta_encodes_timestamps_and_reads_back(spark, tmp_path):
 
 
 def test_failed_overwrite_leaves_no_stale_sidecar(spark, tmp_path):
-    """A write that fails after Spark has cleared the old output must
-    not leave the old sidecar claiming the old rows and hash."""
+    """A plain export that fails keeps the previous output readable, and
+    the sidecar on disk still describes exactly the files on disk: the
+    first export's 10 rows. The staging directory is gone."""
     out = str(tmp_path / "out")
     write_parquet_with_metadata(_candles(spark, 10), out)
     with open(out + ".meta.json") as fh:
-        assert json.load(fh)["validation"]["rows"] == 10
+        before = json.load(fh)
+    files = sorted(p.name for p in (tmp_path / "out").rglob("*.parquet"))
     # validation and the hash never read NOTE, so only the write fails
-    bad = _candles(spark, 10).withColumn("NOTE", F.raise_error(F.lit("boom")))
+    bad = _candles(spark, 20).withColumn("NOTE", F.raise_error(F.lit("boom")))
     with pytest.raises(PySparkException, match="boom"):
         write_parquet_with_metadata(bad, out)
-    assert not os.path.exists(out + ".meta.json")
+    assert spark.read.parquet(out).count() == 10
+    assert sorted(p.name for p in (tmp_path / "out").rglob("*.parquet")) == files
+    with open(out + ".meta.json") as fh:
+        assert json.load(fh) == before
+    assert before["validation"]["rows"] == 10
+    assert sorted(os.listdir(tmp_path)) == ["out", "out.meta.json"]
 
 
 def test_empty_export_keeps_null_span(spark, tmp_path):
