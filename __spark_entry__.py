@@ -73,7 +73,6 @@ _SHOWCASE_FIRST = (
     "anchor_text_census",  # per-target anchor volume/vocabulary (round 12)
     "domain_authority",  # PageRank over EXTRACTED edges; arithmetic oracle (round 12)
     "authority_sample",  # rank-weighted A-Res doc selection (round 12)
-    "frontier_rank",  # anti-join + authority-ranked fetch queue (round 12)
     "table_qa_samples",  # header-joined table-QA sample prep (round 12)
     "outlink_census",  # per-domain outlink stats from raw WARC records (round 12)
     "stream_url_dedup_append",  # watermarked append-mode dedup twin (round 12)
@@ -91,10 +90,8 @@ _SHOWCASE_FIRST = (
     "url_canonicalize",  # stage -0.5: full-URL canonical + SURT key (round 11)
     "url_dedup",  # URL-level keep-first dedup across crawl snapshots (round 11)
     "stream_url_dedup",  # the same keep-first as a stateful stream agg (round 11)
-    "domain_authority",  # crawl-domain PageRank off canonical URLs (round 11)
     "warc_curation_funnel",  # funnel rebased with the n_urldedup stage (round 11)
     "corpus_build_e2e_warc",  # e2e build pruning refetches pre-extract (round 11)
-    "bt_ratings",  # Bradley-Terry MM strength fit over quality duels (round 11)
     "bt_length_effect",  # strength-controlled length-bias OLS readout (round 11)
     "fim_samples",  # PSM/SPM fill-in-the-middle prep off code_detect (round 11)
     "stream_fim_samples",  # the code route's streaming front door (round 11)
@@ -122,10 +119,8 @@ _SHOWCASE_FIRST = (
     "zipf_fit",  # round 9 fix: min_count + top_n head bound
     # round-10 new families
     "corpus_build_e2e",  # funnel→canonical→DoReMi gate→pack→shard (round 10)
-    "corpus_build_e2e_warc",  # the same build from raw crawl records (round 10)
     "warc_extract",  # crawl-record envelope parsing, stage -1 (round 10)
     "stream_warc_extract",  # the record parser on the blob stream (round 10)
-    "warc_curation_funnel",  # funnel from raw WARC records (round 10)
     "bpe_bytes_train",  # byte-level BPE trainer, no OOV (round 10)
     "bpe_bytes_encode",  # byte-level encode via distinct-word walk (round 10)
     "tokenizer_oov_cost",  # word-level trainers' OOV blind spot (round 10)
@@ -152,14 +147,11 @@ _SHOWCASE_FIRST = (
     "ngram_novelty",  # held-out memorization audit (round 10)
     "curation_route",  # fused one-projection signal routing (round 10)
     "stream_curation_route",  # crawl front door as one stream chain (round 10)
-    "bitext_mine",  # ratio-margin parallel-pair mining (round 10)
     "bitext_mine_ivf",  # inverted-list candidate generator (round 10)
-    "bitext_recall",  # exact-vs-bucketed kept-pair overlap (round 10)
     "source_route_census",  # per-source route mix datasheet rollup (round 10)
     "mixture_waterfill",  # capped-budget water-filling allocator (round 10)
     "domain_quality_prior",  # per-domain reputation prior + residual flags (round 10)
     "jl_project",  # data-oblivious JL dim reduction (round 10)
-    "jl_distortion",  # measured distance-preservation readout (round 10)
     # family-spanning classics (reference parity + heavy hitters)
     "candles_5m",
     "dedupe_keep_first",
@@ -195,17 +187,18 @@ _SHOWCASE_FIRST = (
 )
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from etl_finance_pipeline_spark.plans.queries import QUERIES
+def _showcase_ordered() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]]:
+    """The registry with ``_SHOWCASE_FIRST`` hoisted to the front."""
+    from etl_finance_pipeline_spark.plans.queries import REGISTRY
 
-    ordered = {k: QUERIES[k] for k in _SHOWCASE_FIRST if k in QUERIES}
-    ordered.update(QUERIES)
+    ordered = {k: REGISTRY[k] for k in _SHOWCASE_FIRST}
+    ordered.update(REGISTRY)
     return ordered
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {k: plan for k, (plan, _) in _showcase_ordered().items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    from etl_finance_pipeline_spark.plans.queries import ORACLES
-
-    ordered = {k: ORACLES[k] for k in _SHOWCASE_FIRST if k in ORACLES}
-    ordered.update(ORACLES)
-    return ordered
+    return {k: sql for k, (_, sql) in _showcase_ordered().items()}

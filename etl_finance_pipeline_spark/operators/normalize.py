@@ -45,6 +45,10 @@ NUMERIC_COLUMNS = ["OPEN", "HIGH", "LOW", "CLOSE", "VOLUME", "TICKVOL", "SPREAD"
 #: (parity: normalize.py:146-153 — post-rename this is TIMESTAMP).
 DATETIME_CANDIDATES = ("timestamp", "datetime", "time", "date", "ts")
 
+#: Years scanned for DST transitions when a source zone is localized;
+#: stamps outside them are never flagged ambiguous or nonexistent.
+DST_SCAN_YEARS = (1990, 2035)
+
 
 # --------------------------------------------------------------------
 # P1 — synonym-map rename (pure driver logic over df.columns)
@@ -206,18 +210,17 @@ def normalize_datetime(
     ts_col: str | None = None,
     source_tz: str | None = None,
     target_tz: str = "UTC",
-    formats: list[str] | None = None,
-    data_years: tuple[int, int] = (1990, 2035),
 ) -> tuple[DataFrame, dict]:
     """Coerce the datetime column to TimestampType and apply the
     timezone policy.
 
-    * String/other inputs are coerced via ``try_to_timestamp`` (with an
-      optional list of explicit formats tried in order) — invalid values
-      become NULL, counted in the report (D2/D5).
+    * String/other inputs are coerced via ``try_to_timestamp`` with
+      Spark's default timestamp parsing — invalid values become NULL,
+      counted in the report (D2/D5).
     * If *source_tz* is given, naive stamps are interpreted in that zone
       via ``to_utc_timestamp``; wall-clock values falling in an
-      ambiguous DST window are NULLed and counted (reference
+      ambiguous DST window (scanned over ``DST_SCAN_YEARS``) are
+      NULLed and counted (reference
       ``ambiguous="NaT"``); nonexistent values are shifted forward by
       ``to_utc_timestamp``'s resolution and flagged (D3).
     * If no *source_tz*, stamps are assumed UTC and the report carries
@@ -244,17 +247,13 @@ def normalize_datetime(
 
     if dtype.startswith("timestamp"):
         coerced = original.cast("timestamp")
-    elif formats:
-        coerced = F.coalesce(
-            *[F.try_to_timestamp(original.cast("string"), F.lit(f)) for f in formats]
-        )
     else:
         coerced = F.try_to_timestamp(original.cast("string"))
 
     report: dict = {"needs_review": False, "source_tz": source_tz or "UTC(assumed)"}
 
     if source_tz and source_tz.upper() != "UTC":
-        windows = dst_transition_windows(source_tz, *data_years)
+        windows = dst_transition_windows(source_tz, *DST_SCAN_YEARS)
         amb = [w for w in windows if w[2] == "ambiguous"]
         nonex = [w for w in windows if w[2] == "nonexistent"]
 
@@ -407,10 +406,13 @@ def normalize_df(
     required_columns: list[str] | None = None,
     source_tz: str | None = None,
     target_tz: str = "UTC",
-    dedupe_keys: list[str] | None = None,
     dedupe_order: list[str | Column] | None = None,
 ) -> NormalizeResult:
     """rename → validate → coerce dtypes → datetime/tz → dedupe.
+
+    The dedupe keeps the first row (by *dedupe_order*) of each
+    ``(SYMBOL, TIMESTAMP)`` key, or of each ``TIMESTAMP`` when the
+    frame has no ``SYMBOL`` column.
 
     Runs no action. The report is ONE aggregate, observed
     (``DataFrame.observe``) on the pre-dedupe frame: the row count plus
@@ -482,7 +484,7 @@ def normalize_df(
     if corrupt:
         out = out.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     out = out.drop("_ts_was_null", "_ts_no_offset", *[f"_{k}" for k in coerced])
-    keys = dedupe_keys or (["SYMBOL", "TIMESTAMP"] if "SYMBOL" in out.columns else ["TIMESTAMP"])
+    keys = ["SYMBOL", "TIMESTAMP"] if "SYMBOL" in out.columns else ["TIMESTAMP"]
     out = remove_duplicates(out, keys, dedupe_order)
     return NormalizeResult(df=out, _observation=observation, _build=build)
 

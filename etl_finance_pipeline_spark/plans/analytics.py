@@ -1716,62 +1716,33 @@ SELECT u AS id, CAST(count(*) AS BIGINT) AS core_degree FROM (
 )
 
 
-QUERIES_AN: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "k_core": q_k_core,
-    "hll_distinct_users": q_hll_distinct_users,
-    "kmv_distinct_users": q_kmv_distinct_users,
-    "triangles": q_triangles,
-    "assoc_rules": q_assoc_rules,
-    "bloom_semi_orders": q_bloom_semi_orders,
-    "zorder_stats": q_zorder_stats,
-    "heavy_hitters_cms": q_heavy_hitters_cms,
-    "source_drift": q_source_drift,
-    "funnel_conversion": q_funnel_conversion,
-    "bfs_reach": q_bfs_reach,
-    "anomalies_mad": q_anomalies_mad,
-    "clustering_coeff": q_clustering_coeff,
-    "image_resize_ppm": q_image_resize_ppm,
-    "audio_zcr": q_audio_zcr,
-    "feature_hash": q_feature_hash,
-    "stream_cms": q_stream_cms,
-    "audience_overlap": q_audience_overlap,
-    "hist_quantiles": q_hist_quantiles,
-    "markov_transitions": q_markov_transitions,
-    "communities_lpa": q_communities_lpa,
-    "hotkey_purchase_join": q_hotkey_purchase_join,
-    "cuped_experiment": q_cuped_experiment,
-    "k_anonymity": q_k_anonymity,
-    "impute_acctbal": q_impute_acctbal,
-    "segment_index": q_segment_index,
-    "rolling_distinct_7d": q_rolling_distinct_7d,
-}
-
-ORACLES_AN: dict[str, str] = {
-    "k_core": SQL_K_CORE,
-    "hll_distinct_users": SQL_HLL_DISTINCT_USERS,
-    "kmv_distinct_users": SQL_KMV_DISTINCT_USERS,
-    "triangles": SQL_TRIANGLES,
-    "assoc_rules": SQL_ASSOC_RULES,
-    "bloom_semi_orders": SQL_BLOOM_SEMI_ORDERS,
-    "zorder_stats": SQL_ZORDER_STATS,
-    "heavy_hitters_cms": SQL_HEAVY_HITTERS_CMS,
-    "source_drift": SQL_SOURCE_DRIFT,
-    "funnel_conversion": SQL_FUNNEL_CONVERSION,
-    "bfs_reach": SQL_BFS_REACH,
-    "anomalies_mad": SQL_ANOMALIES_MAD,
-    "clustering_coeff": SQL_CLUSTERING_COEFF,
-    "image_resize_ppm": SQL_IMAGE_RESIZE_PPM,
-    "audio_zcr": SQL_AUDIO_ZCR,
-    "feature_hash": SQL_FEATURE_HASH,
-    "stream_cms": SQL_STREAM_CMS,
-    "audience_overlap": SQL_AUDIENCE_OVERLAP,
-    "hist_quantiles": SQL_HIST_QUANTILES,
-    "markov_transitions": SQL_MARKOV_TRANSITIONS,
-    "communities_lpa": SQL_COMMUNITIES_LPA,
-    "hotkey_purchase_join": SQL_HOTKEY_PURCHASE_JOIN,
-    "cuped_experiment": SQL_CUPED_EXPERIMENT,
-    "k_anonymity": SQL_K_ANONYMITY,
-    "impute_acctbal": SQL_IMPUTE_ACCTBAL,
-    "segment_index": SQL_SEGMENT_INDEX,
-    "rolling_distinct_7d": SQL_ROLLING_DISTINCT_7D,
+#: name -> (Spark plan, DuckDB oracle SQL); plans/queries.py merges it into ``REGISTRY``.
+REGISTRY_AN: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]] = {
+    "k_core": (q_k_core, SQL_K_CORE),
+    "hll_distinct_users": (q_hll_distinct_users, SQL_HLL_DISTINCT_USERS),
+    "kmv_distinct_users": (q_kmv_distinct_users, SQL_KMV_DISTINCT_USERS),
+    "triangles": (q_triangles, SQL_TRIANGLES),
+    "assoc_rules": (q_assoc_rules, SQL_ASSOC_RULES),
+    "bloom_semi_orders": (q_bloom_semi_orders, SQL_BLOOM_SEMI_ORDERS),
+    "zorder_stats": (q_zorder_stats, SQL_ZORDER_STATS),
+    "heavy_hitters_cms": (q_heavy_hitters_cms, SQL_HEAVY_HITTERS_CMS),
+    "source_drift": (q_source_drift, SQL_SOURCE_DRIFT),
+    "funnel_conversion": (q_funnel_conversion, SQL_FUNNEL_CONVERSION),
+    "bfs_reach": (q_bfs_reach, SQL_BFS_REACH),
+    "anomalies_mad": (q_anomalies_mad, SQL_ANOMALIES_MAD),
+    "clustering_coeff": (q_clustering_coeff, SQL_CLUSTERING_COEFF),
+    "image_resize_ppm": (q_image_resize_ppm, SQL_IMAGE_RESIZE_PPM),
+    "audio_zcr": (q_audio_zcr, SQL_AUDIO_ZCR),
+    "feature_hash": (q_feature_hash, SQL_FEATURE_HASH),
+    "stream_cms": (q_stream_cms, SQL_STREAM_CMS),
+    "audience_overlap": (q_audience_overlap, SQL_AUDIENCE_OVERLAP),
+    "hist_quantiles": (q_hist_quantiles, SQL_HIST_QUANTILES),
+    "markov_transitions": (q_markov_transitions, SQL_MARKOV_TRANSITIONS),
+    "communities_lpa": (q_communities_lpa, SQL_COMMUNITIES_LPA),
+    "hotkey_purchase_join": (q_hotkey_purchase_join, SQL_HOTKEY_PURCHASE_JOIN),
+    "cuped_experiment": (q_cuped_experiment, SQL_CUPED_EXPERIMENT),
+    "k_anonymity": (q_k_anonymity, SQL_K_ANONYMITY),
+    "impute_acctbal": (q_impute_acctbal, SQL_IMPUTE_ACCTBAL),
+    "segment_index": (q_segment_index, SQL_SEGMENT_INDEX),
+    "rolling_distinct_7d": (q_rolling_distinct_7d, SQL_ROLLING_DISTINCT_7D),
 }

@@ -2968,153 +2968,79 @@ FROM w
 # Registry
 # --------------------------------------------------------------------
 
-from etl_finance_pipeline_spark.plans.analytics import (  # noqa: E402
-    ORACLES_AN,
-    QUERIES_AN,
-)
-from etl_finance_pipeline_spark.plans.training_data import (  # noqa: E402
-    ORACLES_TD,
-    QUERIES_TD,
-)
+from etl_finance_pipeline_spark.plans.analytics import REGISTRY_AN  # noqa: E402
+from etl_finance_pipeline_spark.plans.training_data import REGISTRY_TD  # noqa: E402
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "candles_5m": q_candles_5m,
-    "dedupe_keep_first": q_dedupe_keep_first,
-    "missing_minutes": q_missing_minutes,
-    "gap_islands": q_gap_islands,
-    "reindex_ffill": q_reindex_ffill,
-    "interpolate_linear": q_interpolate_linear,
-    "resample_1h": q_resample_1h,
-    "resample_monthly": q_resample_monthly,
-    "sma": q_sma,
-    "indicators": q_indicators,
-    "returns": q_returns,
-    "dq_profile": q_dq_profile,
-    "pricing_summary": q_pricing_summary,
-    "nation_revenue": q_nation_revenue,
-    "top_customers": q_top_customers,
-    "late_order_priorities": q_late_order_priorities,
-    "supplier_rank_by_nation": q_supplier_rank_by_nation,
-    "part_type_share": q_part_type_share,
-    "ship_priority": q_ship_priority,
-    "big_orders": q_big_orders,
-    "trade_volume": q_trade_volume,
-    "small_qty_revenue": q_small_qty_revenue,
-    "stale_parts": q_stale_parts,
-    "clean_orders": q_clean_orders,
-    "order_quartiles": q_order_quartiles,
-    "repeat_buyers": q_repeat_buyers,
-    "revenue_rollup": q_revenue_rollup,
-    "priority_pivot": q_priority_pivot,
-    "exact_dedup_docs": q_exact_dedup_docs,
-    "text_stats": q_text_stats,
-    "ann_topk": q_ann_topk,
-    "cust_order_dist": q_cust_order_dist,
-    "nation_acctbal_share": q_nation_acctbal_share,
-    "promo_revenue_share": q_promo_revenue_share,
-    "window_shoppers": q_window_shoppers,
-    "returns_cube": q_returns_cube,
-    "grouping_sets_sql": q_grouping_sets_sql,
-    "rolling_7d_revenue": q_rolling_7d_revenue,
-    "weekly_retention": q_weekly_retention,
-    "brand_supplier_counts": q_brand_supplier_counts,
-    "price_quantity_stats": q_price_quantity_stats,
-    "tfidf_top_terms": q_tfidf_top_terms,
-    "forecast_revenue": q_forecast_revenue,
-    "disjunctive_parts": q_disjunctive_parts,
-    "market_share": q_market_share,
-    "top_supplier": q_top_supplier,
-    "idle_customers": q_idle_customers,
-    "lonely_suppliers": q_lonely_suppliers,
-    "acctbal_percentiles": q_acctbal_percentiles,
-    "risk_indicators": q_risk_indicators,
-    "macd": q_macd,
-    "rsi": q_rsi,
-    "obv": q_obv,
-    "cusum": q_cusum,
-    "trend_ols": q_trend_ols,
-    "snapshot_diff": q_snapshot_diff,
-    "salted_event_stats": q_salted_event_stats,
-    "salted_purchase_join": q_salted_purchase_join,
-    "bm25_search": q_bm25_search,
-    "hybrid_search": q_hybrid_search,
-    "order_percentiles": q_order_percentiles,
-    "winsorized_prices": q_winsorized_prices,
-    "value_histogram": q_value_histogram,
-    "candles_long": q_candles_long,
-    "user_journeys": q_user_journeys,
-    "fuzzy_part_names": q_fuzzy_part_names,
-    **QUERIES_TD,
-    **QUERIES_AN,
-}
-
-ORACLES: dict[str, str] = {
-    "candles_5m": SQL_CANDLES_5M,
-    "dedupe_keep_first": SQL_DEDUPE_KEEP_FIRST,
-    "missing_minutes": SQL_MISSING_MINUTES,
-    "gap_islands": SQL_GAP_ISLANDS,
-    "reindex_ffill": SQL_REINDEX_FFILL,
-    "interpolate_linear": SQL_INTERPOLATE_LINEAR,
-    "resample_1h": SQL_RESAMPLE_1H,
-    "resample_monthly": SQL_RESAMPLE_MONTHLY,
-    "sma": SQL_SMA,
-    "indicators": SQL_INDICATORS,
-    "returns": SQL_RETURNS,
-    "dq_profile": SQL_DQ_PROFILE,
-    "pricing_summary": SQL_PRICING_SUMMARY,
-    "nation_revenue": SQL_NATION_REVENUE,
-    "top_customers": SQL_TOP_CUSTOMERS,
-    "late_order_priorities": SQL_LATE_ORDER_PRIORITIES,
-    "supplier_rank_by_nation": SQL_SUPPLIER_RANK_BY_NATION,
-    "part_type_share": SQL_PART_TYPE_SHARE,
-    "ship_priority": SQL_SHIP_PRIORITY,
-    "big_orders": SQL_BIG_ORDERS,
-    "trade_volume": SQL_TRADE_VOLUME,
-    "small_qty_revenue": SQL_SMALL_QTY_REVENUE,
-    "stale_parts": SQL_STALE_PARTS,
-    "clean_orders": SQL_CLEAN_ORDERS,
-    "order_quartiles": SQL_ORDER_QUARTILES,
-    "repeat_buyers": SQL_REPEAT_BUYERS,
-    "revenue_rollup": SQL_REVENUE_ROLLUP,
-    "priority_pivot": SQL_PRIORITY_PIVOT,
-    "exact_dedup_docs": SQL_EXACT_DEDUP_DOCS,
-    "text_stats": SQL_TEXT_STATS,
-    "ann_topk": SQL_ANN_TOPK,
-    "cust_order_dist": SQL_CUST_ORDER_DIST,
-    "nation_acctbal_share": SQL_NATION_ACCTBAL_SHARE,
-    "promo_revenue_share": SQL_PROMO_REVENUE_SHARE,
-    "window_shoppers": SQL_WINDOW_SHOPPERS,
-    "returns_cube": SQL_RETURNS_CUBE,
-    "grouping_sets_sql": _GROUPING_SETS_SQL,
-    "rolling_7d_revenue": SQL_ROLLING_7D_REVENUE,
-    "weekly_retention": SQL_WEEKLY_RETENTION,
-    "brand_supplier_counts": SQL_BRAND_SUPPLIER_COUNTS,
-    "price_quantity_stats": SQL_PRICE_QUANTITY_STATS,
-    "tfidf_top_terms": SQL_TFIDF_TOP_TERMS,
-    "forecast_revenue": SQL_FORECAST_REVENUE,
-    "disjunctive_parts": SQL_DISJUNCTIVE_PARTS,
-    "market_share": SQL_MARKET_SHARE,
-    "top_supplier": SQL_TOP_SUPPLIER,
-    "idle_customers": SQL_IDLE_CUSTOMERS,
-    "lonely_suppliers": SQL_LONELY_SUPPLIERS,
-    "acctbal_percentiles": SQL_ACCTBAL_PERCENTILES,
-    "risk_indicators": SQL_RISK_INDICATORS,
-    "macd": SQL_MACD,
-    "rsi": SQL_RSI,
-    "obv": SQL_OBV,
-    "cusum": SQL_CUSUM,
-    "trend_ols": SQL_TREND_OLS,
-    "snapshot_diff": SQL_SNAPSHOT_DIFF,
-    "salted_event_stats": SQL_SALTED_EVENT_STATS,
-    "salted_purchase_join": SQL_SALTED_PURCHASE_JOIN,
-    "bm25_search": SQL_BM25_SEARCH,
-    "hybrid_search": SQL_HYBRID_SEARCH,
-    "order_percentiles": SQL_ORDER_PERCENTILES,
-    "winsorized_prices": SQL_WINSORIZED_PRICES,
-    "value_histogram": SQL_VALUE_HISTOGRAM,
-    "candles_long": SQL_CANDLES_LONG,
-    "user_journeys": SQL_USER_JOURNEYS,
-    "fuzzy_part_names": SQL_FUZZY_PART_NAMES,
-    **ORACLES_TD,
-    **ORACLES_AN,
+#: name -> (Spark plan, DuckDB oracle SQL); this module's own entries, then the
+#: training-data and analytics tables; ``__spark_entry__`` derives the
+#: driver's ``queries()`` and ``oracle_sql()`` from it.
+REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]] = {
+    "candles_5m": (q_candles_5m, SQL_CANDLES_5M),
+    "dedupe_keep_first": (q_dedupe_keep_first, SQL_DEDUPE_KEEP_FIRST),
+    "missing_minutes": (q_missing_minutes, SQL_MISSING_MINUTES),
+    "gap_islands": (q_gap_islands, SQL_GAP_ISLANDS),
+    "reindex_ffill": (q_reindex_ffill, SQL_REINDEX_FFILL),
+    "interpolate_linear": (q_interpolate_linear, SQL_INTERPOLATE_LINEAR),
+    "resample_1h": (q_resample_1h, SQL_RESAMPLE_1H),
+    "resample_monthly": (q_resample_monthly, SQL_RESAMPLE_MONTHLY),
+    "sma": (q_sma, SQL_SMA),
+    "indicators": (q_indicators, SQL_INDICATORS),
+    "returns": (q_returns, SQL_RETURNS),
+    "dq_profile": (q_dq_profile, SQL_DQ_PROFILE),
+    "pricing_summary": (q_pricing_summary, SQL_PRICING_SUMMARY),
+    "nation_revenue": (q_nation_revenue, SQL_NATION_REVENUE),
+    "top_customers": (q_top_customers, SQL_TOP_CUSTOMERS),
+    "late_order_priorities": (q_late_order_priorities, SQL_LATE_ORDER_PRIORITIES),
+    "supplier_rank_by_nation": (q_supplier_rank_by_nation, SQL_SUPPLIER_RANK_BY_NATION),
+    "part_type_share": (q_part_type_share, SQL_PART_TYPE_SHARE),
+    "ship_priority": (q_ship_priority, SQL_SHIP_PRIORITY),
+    "big_orders": (q_big_orders, SQL_BIG_ORDERS),
+    "trade_volume": (q_trade_volume, SQL_TRADE_VOLUME),
+    "small_qty_revenue": (q_small_qty_revenue, SQL_SMALL_QTY_REVENUE),
+    "stale_parts": (q_stale_parts, SQL_STALE_PARTS),
+    "clean_orders": (q_clean_orders, SQL_CLEAN_ORDERS),
+    "order_quartiles": (q_order_quartiles, SQL_ORDER_QUARTILES),
+    "repeat_buyers": (q_repeat_buyers, SQL_REPEAT_BUYERS),
+    "revenue_rollup": (q_revenue_rollup, SQL_REVENUE_ROLLUP),
+    "priority_pivot": (q_priority_pivot, SQL_PRIORITY_PIVOT),
+    "exact_dedup_docs": (q_exact_dedup_docs, SQL_EXACT_DEDUP_DOCS),
+    "text_stats": (q_text_stats, SQL_TEXT_STATS),
+    "ann_topk": (q_ann_topk, SQL_ANN_TOPK),
+    "cust_order_dist": (q_cust_order_dist, SQL_CUST_ORDER_DIST),
+    "nation_acctbal_share": (q_nation_acctbal_share, SQL_NATION_ACCTBAL_SHARE),
+    "promo_revenue_share": (q_promo_revenue_share, SQL_PROMO_REVENUE_SHARE),
+    "window_shoppers": (q_window_shoppers, SQL_WINDOW_SHOPPERS),
+    "returns_cube": (q_returns_cube, SQL_RETURNS_CUBE),
+    "grouping_sets_sql": (q_grouping_sets_sql, _GROUPING_SETS_SQL),
+    "rolling_7d_revenue": (q_rolling_7d_revenue, SQL_ROLLING_7D_REVENUE),
+    "weekly_retention": (q_weekly_retention, SQL_WEEKLY_RETENTION),
+    "brand_supplier_counts": (q_brand_supplier_counts, SQL_BRAND_SUPPLIER_COUNTS),
+    "price_quantity_stats": (q_price_quantity_stats, SQL_PRICE_QUANTITY_STATS),
+    "tfidf_top_terms": (q_tfidf_top_terms, SQL_TFIDF_TOP_TERMS),
+    "forecast_revenue": (q_forecast_revenue, SQL_FORECAST_REVENUE),
+    "disjunctive_parts": (q_disjunctive_parts, SQL_DISJUNCTIVE_PARTS),
+    "market_share": (q_market_share, SQL_MARKET_SHARE),
+    "top_supplier": (q_top_supplier, SQL_TOP_SUPPLIER),
+    "idle_customers": (q_idle_customers, SQL_IDLE_CUSTOMERS),
+    "lonely_suppliers": (q_lonely_suppliers, SQL_LONELY_SUPPLIERS),
+    "acctbal_percentiles": (q_acctbal_percentiles, SQL_ACCTBAL_PERCENTILES),
+    "risk_indicators": (q_risk_indicators, SQL_RISK_INDICATORS),
+    "macd": (q_macd, SQL_MACD),
+    "rsi": (q_rsi, SQL_RSI),
+    "obv": (q_obv, SQL_OBV),
+    "cusum": (q_cusum, SQL_CUSUM),
+    "trend_ols": (q_trend_ols, SQL_TREND_OLS),
+    "snapshot_diff": (q_snapshot_diff, SQL_SNAPSHOT_DIFF),
+    "salted_event_stats": (q_salted_event_stats, SQL_SALTED_EVENT_STATS),
+    "salted_purchase_join": (q_salted_purchase_join, SQL_SALTED_PURCHASE_JOIN),
+    "bm25_search": (q_bm25_search, SQL_BM25_SEARCH),
+    "hybrid_search": (q_hybrid_search, SQL_HYBRID_SEARCH),
+    "order_percentiles": (q_order_percentiles, SQL_ORDER_PERCENTILES),
+    "winsorized_prices": (q_winsorized_prices, SQL_WINSORIZED_PRICES),
+    "value_histogram": (q_value_histogram, SQL_VALUE_HISTOGRAM),
+    "candles_long": (q_candles_long, SQL_CANDLES_LONG),
+    "user_journeys": (q_user_journeys, SQL_USER_JOURNEYS),
+    "fuzzy_part_names": (q_fuzzy_part_names, SQL_FUZZY_PART_NAMES),
+    **REGISTRY_TD,
+    **REGISTRY_AN,
 }

@@ -17190,504 +17190,254 @@ FROM jdp
 """
 
 
-QUERIES_TD: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "unigram_train": q_unigram_train,
-    "unigram_segment": q_unigram_segment,
-    "unigram_train_pruned": q_unigram_train_pruned,
-    "wordpiece_train": q_wordpiece_train,
-    "wordpiece_encode_corpus": q_wordpiece_encode_corpus,
-    "tokenizer_efficiency": q_tokenizer_efficiency,
-    "line_dedup": q_line_dedup,
-    "line_dedup_keep_first": q_line_dedup_keep_first,
-    "incremental_line_dedup": q_incremental_line_dedup,
-    "embedding_covariance": q_embedding_covariance,
-    "pca_top_component": q_pca_top_component,
-    "pca_project": q_pca_project,
-    "stream_quality_filter": q_stream_quality_filter,
-    "pca_reduce2": q_pca_reduce2,
-    "pca_outliers": q_pca_outliers,
-    "dsir_weights": q_dsir_weights,
-    "dsir_select": q_dsir_select,
-    "c4_clean": q_c4_clean,
-    "gopher_quality": q_gopher_quality,
-    "kn_bigram_lm": q_kn_bigram_lm,
-    "kn_perplexity": q_kn_perplexity,
-    "ccnet_buckets": q_ccnet_buckets,
-    "probe_auc": q_probe_auc,
-    "fasttext_probe": q_fasttext_probe,
-    "fasttext_auc": q_fasttext_auc,
-    "fasttext_select": q_fasttext_select,
-    "stream_fasttext_score": q_stream_fasttext_score,
-    "domain_filter": q_domain_filter,
-    "url_canonicalize": q_url_canonicalize,
-    "url_dedup": q_url_dedup,
-    "stream_url_dedup": q_stream_url_dedup,
-    "stream_url_dedup_append": q_stream_url_dedup_append,
-    "stream_domain_filter": q_stream_domain_filter,
-    "html_extract": q_html_extract,
-    "html_tables": q_html_tables,
-    "html_table_census": q_html_table_census,
-    "stream_html_extract": q_stream_html_extract,
-    "html_c4_gate": q_html_c4_gate,
-    "web_curation_funnel": q_web_curation_funnel,
-    "domain_rollup": q_domain_rollup,
-    "cluster_mix": q_cluster_mix,
-    "cluster_profile": q_cluster_profile,
-    "quality_calibration": q_quality_calibration,
-    "lsh_recall": q_lsh_recall,
-    "langid_confusion": q_langid_confusion,
-    "ngram_repetition": q_ngram_repetition,
-    "repetition_filter": q_repetition_filter,
-    "source_kl": q_source_kl,
-    "vocab_coverage": q_vocab_coverage,
-    "zipf_fit": q_zipf_fit,
-    "pack_efficiency": q_pack_efficiency,
-    "quality_ece": q_quality_ece,
-    "hard_negatives": q_hard_negatives,
-    "containment_pairs": q_containment_pairs,
-    "near_dup_rewrite": q_near_dup_rewrite,
-    "near_dup_rewrite_best": q_near_dup_rewrite_best,
-    "boilerplate_report": q_boilerplate_report,
-    "line_repetition": q_line_repetition,
-    "token_budget": q_token_budget,
-    "curation_funnel": q_curation_funnel,
-    "signal_correlation": q_signal_correlation,
-    "embedding_audit": q_embedding_audit,
-    "source_overlap": q_source_overlap,
-    "normalize_text": q_normalize_text,
-    "rag_retrieve": q_rag_retrieve,
-    "embed_standardize": q_embed_standardize,
-    "stream_dsir": q_stream_dsir,
-    "ann_ivfpq_topk": q_ann_ivfpq_topk,
-    "image_stats_jpeg_mixed": q_image_stats_jpeg_mixed,
-    "media_decode_audit": q_media_decode_audit,
-    "char_entropy": q_char_entropy,
-    "video_fingerprint": q_video_fingerprint,
-    "video_near_dup": q_video_near_dup,
-    "audio_fingerprint": q_audio_fingerprint,
-    "audio_near_dup": q_audio_near_dup,
-    "hamming_near_dup_200k": q_hamming_near_dup_200k,
-    "image_phash": q_image_phash,
-    "phash_near_dup": q_phash_near_dup,
-    "bpe_encode_corpus": q_bpe_encode,
-    "audio_spectrum": q_audio_spectrum,
-    "linear_probe": q_linear_probe,
-    "stream_substring_dedup": q_stream_substring_dedup,
-    "incremental_substring_dedup": q_incremental_substring_dedup,
-    "pq_topk": q_pq_topk,
-    "video_frames_avi": q_video_frames_avi,
-    "scene_cuts_avi": q_scene_cuts_avi,
-    "image_stats_jpeg_color": q_image_stats_jpeg_color,
-    "decontaminate_spans": q_decontaminate_spans,
-    "image_stats_jpeg": q_image_stats_jpeg,
-    "video_frames_real": q_video_frames_real,
-    "scene_cuts_real": q_scene_cuts_real,
-    "substring_dedup": q_substring_dedup,
-    "suffix_dup_spans": q_suffix_dup_spans,
-    "substring_dedup_recall": q_substring_dedup_recall,
-    "substring_dedup_clean": q_substring_dedup_clean,
-    "minhash_lsh_pairs": q_minhash_lsh_pairs,
-    "incremental_near_dup": q_incremental_near_dup,
-    "chunk_docs": q_chunk_docs,
-    "redact_docs": q_redact_docs,
-    "sample_docs": q_sample_docs,
-    "pack_sequences": q_pack_sequences,
-    "pack_bins": q_pack_bins,
-    "semantic_pack": q_semantic_pack,
-    "semantic_pack_stats": q_semantic_pack_stats,
-    "prep_corpus": q_prep_corpus,
-    "shuffle_shard": q_shuffle_shard,
-    "training_batches": q_training_batches,
-    "simhash_pairs": q_simhash_pairs,
-    "ngram_jaccard": q_ngram_jaccard,
-    "set_similarity_exact": q_set_similarity_exact,
-    "decontaminate": q_decontaminate,
-    "lang_id": q_lang_id,
-    "quality_score": q_quality_score,
-    "token_counts": q_token_counts,
-    "fingerprints": q_fingerprints,
-    "ann_lsh_topk": q_ann_lsh_topk,
-    "ann_ivf_topk": q_ann_ivf_topk,
-    "ann_recall": q_ann_recall,
-    "ann_ivf_trained": q_ann_ivf_trained,
-    "embed_near_dup": q_embed_near_dup,
-    "asof_last_click": q_asof_last_click,
-    "asof_next_view": q_asof_next_view,
-    "user_sessions": q_user_sessions,
-    "session_errors": q_session_errors,
-    "props_extract": q_props_extract,
-    "clean_corpus": q_clean_corpus,
-    "media_stats": q_media_stats,
-    "audio_stats": q_audio_stats,
-    "audio_stats_wav": q_audio_stats_wav,
-    "image_stats_ppm": q_image_stats_ppm,
-    "video_frames": q_video_frames,
-    "scene_cuts": q_scene_cuts,
-    "audio_silence": q_audio_silence,
-    "stream_candles": q_stream_candles,
-    "stream_sessions": q_stream_sessions,
-    "stream_dedupe": q_stream_dedupe,
-    "weighted_sample": q_weighted_sample,
-    "temperature_mix": q_temperature_mix,
-    "negative_pairs": q_negative_pairs,
-    "domain_cap": q_domain_cap,
-    "hash_split": q_hash_split,
-    "stream_trending": q_stream_trending,
-    "stream_near_dup": q_stream_near_dup,
-    "stream_gaps": q_stream_gaps,
-    "stream_view_click": q_stream_view_click,
-    "stream_enrich": q_stream_enrich,
-    "near_dup_clusters": q_near_dup_clusters,
-    "near_dup_clusters_star": q_near_dup_clusters_star,
-    "repetition_stats": q_repetition_stats,
-    "unigram_logprob": q_unigram_logprob,
-    "doremi_weights": q_doremi_weights,
-    "doremi_mix_apply": q_doremi_mix_apply,
-    "corpus_build_e2e": q_corpus_build_e2e,
-    "warc_extract": q_warc_extract,
-    "stream_warc_extract": q_stream_warc_extract,
-    "warc_curation_funnel": q_warc_curation_funnel,
-    "corpus_build_e2e_warc": q_corpus_build_e2e_warc,
-    "encoding_audit": q_encoding_audit,
-    "stream_encoding_audit": q_stream_encoding_audit,
-    "unicode_audit": q_unicode_audit,
-    "unicode_normalize": q_unicode_normalize,
-    "unicode_route": q_unicode_route,
-    "pii_card_audit": q_pii_card_audit,
-    "quality_psi": q_quality_psi,
-    "span_corruption": q_span_corruption,
-    "clm_batches": q_clm_batches,
-    "source_census": q_source_census,
-    "ffd_batches": q_ffd_batches,
-    "dedup_savings": q_dedup_savings,
-    "bpe_bytes_train": q_bpe_bytes_train,
-    "bpe_bytes_encode": q_bpe_bytes_encode,
-    "tokenizer_oov_cost": q_tokenizer_oov_cost,
-    "doremi_proxy_compare": q_doremi_proxy_compare,
-    "embed_quantize": q_embed_quantize,
-    "semdedup": q_semdedup,
-    "prototype_prune": q_prototype_prune,
-    "prototype_prune_census": q_prototype_prune_census,
-    "image_stats_png": q_image_stats_png,
-    "pagerank": q_pagerank,
-    "domain_authority": q_domain_authority,
-    "authority_sample": q_authority_sample,
-    "frontier_rank": q_frontier_rank,
-    "link_resolve": q_link_resolve,
-    "trustrank": q_trustrank,
-    "spam_mass": q_spam_mass,
-    "trusted_sample": q_trusted_sample,
-    "host_authority": q_host_authority,
-    "host_census": q_host_census,
-    "pair_alignment": q_pair_alignment,
-    "pair_align_census": q_pair_align_census,
-    "pair_hard_negatives": q_pair_hard_negatives,
-    "sitemap_extract": q_sitemap_extract,
-    "sitemap_index_extract": q_sitemap_index_extract,
-    "frontier_merge": q_frontier_merge,
-    "recrawl_priority": q_recrawl_priority,
-    "soft404_audit": q_soft404_audit,
-    "ai_optout_audit": q_ai_optout_audit,
-    "curation_ledger": q_curation_ledger,
-    "license_census": q_license_census,
-    "crawl_maintain_e2e": q_crawl_maintain_e2e,
-    "hreflang_extract": q_hreflang_extract,
-    "hreflang_census": q_hreflang_census,
-    "revisit_census": q_revisit_census,
-    "stream_index_gate": q_stream_index_gate,
-    "meta_robots_audit": q_meta_robots_audit,
-    "canonical_collapse": q_canonical_collapse,
-    "index_gate": q_index_gate,
-    "edge_gate_census": q_edge_gate_census,
-    "redirect_resolve": q_redirect_resolve,
-    "robots_gate": q_robots_gate,
-    "frontier_schedule": q_frontier_schedule,
-    "crawl_funnel": q_crawl_funnel,
-    "table_qa_samples": q_table_qa_samples,
-    "link_extract": q_link_extract,
-    "stream_link_extract": q_stream_link_extract,
-    "anchor_texts": q_anchor_texts,
-    "anchor_text_census": q_anchor_text_census,
-    "outlink_census": q_outlink_census,
-    "cross_doc_repetition": q_cross_doc_repetition,
-    "bpe_train": q_bpe_train,
-    "script_census": q_script_census,
-    "code_detect": q_code_detect,
-    "fim_samples": q_fim_samples,
-    "stream_fim_samples": q_stream_fim_samples,
-    "ngram_novelty": q_ngram_novelty,
-    "curation_route": q_curation_route,
-    "stream_curation_route": q_stream_curation_route,
-    "bitext_mine": q_bitext_mine,
-    "bitext_mine_ivf": q_bitext_mine_ivf,
-    "bitext_recall": q_bitext_recall,
-    "source_route_census": q_source_route_census,
-    "mixture_waterfill": q_mixture_waterfill,
-    "anneal_schedule": q_anneal_schedule,
-    "domain_quality_prior": q_domain_quality_prior,
-    "jl_project": q_jl_project,
-    "jl_distortion": q_jl_distortion,
-    "sft_render": q_sft_render,
-    "sft_loss_mask": q_sft_loss_mask,
-    "template_dedup_audit": q_template_dedup_audit,
-    "sft_pack": q_sft_pack,
-    "stream_sft_render": q_stream_sft_render,
-    "pref_pairs": q_pref_pairs,
-    "pref_length_bias": q_pref_length_bias,
-    "bt_ratings": q_bt_ratings,
-    "bt_length_effect": q_bt_length_effect,
-    "best_of_n_gain": q_best_of_n_gain,
-    "epoch_schedule": q_epoch_schedule,
-    "lsh_tradeoff": q_lsh_tradeoff,
-}
-
-ORACLES_TD: dict[str, str] = {
-    "unigram_train": SQL_UNIGRAM_TRAIN,
-    "unigram_segment": SQL_UNIGRAM_SEGMENT,
-    "unigram_train_pruned": SQL_UNIGRAM_TRAIN_PRUNED,
-    "wordpiece_train": SQL_WORDPIECE_TRAIN,
-    "wordpiece_encode_corpus": SQL_WORDPIECE_ENCODE_CORPUS,
-    "tokenizer_efficiency": SQL_TOKENIZER_EFFICIENCY,
-    "line_dedup": SQL_LINE_DEDUP,
-    "line_dedup_keep_first": SQL_LINE_DEDUP_KEEP_FIRST,
-    "incremental_line_dedup": SQL_INCREMENTAL_LINE_DEDUP,
-    "embedding_covariance": SQL_EMBEDDING_COVARIANCE,
-    "pca_top_component": SQL_PCA_TOP_COMPONENT,
-    "pca_project": SQL_PCA_PROJECT,
-    "stream_quality_filter": SQL_STREAM_QUALITY_FILTER,
-    "pca_reduce2": SQL_PCA_REDUCE2,
-    "pca_outliers": SQL_PCA_OUTLIERS,
-    "dsir_weights": SQL_DSIR_WEIGHTS,
-    "dsir_select": SQL_DSIR_SELECT,
-    "c4_clean": SQL_C4_CLEAN,
-    "gopher_quality": SQL_GOPHER_QUALITY,
-    "kn_bigram_lm": SQL_KN_BIGRAM_LM,
-    "kn_perplexity": SQL_KN_PERPLEXITY,
-    "ccnet_buckets": SQL_CCNET_BUCKETS,
-    "probe_auc": SQL_PROBE_AUC,
-    "fasttext_probe": SQL_FASTTEXT_PROBE,
-    "fasttext_auc": SQL_FASTTEXT_AUC,
-    "fasttext_select": SQL_FASTTEXT_SELECT,
-    "stream_fasttext_score": SQL_STREAM_FASTTEXT_SCORE,
-    "domain_filter": SQL_DOMAIN_FILTER,
-    "url_canonicalize": SQL_URL_CANONICALIZE,
-    "url_dedup": SQL_URL_DEDUP,
-    "stream_url_dedup": SQL_URL_DEDUP,
-    "stream_url_dedup_append": SQL_STREAM_URL_DEDUP_APPEND,
-    "stream_domain_filter": SQL_STREAM_DOMAIN_FILTER,
-    "html_extract": SQL_HTML_EXTRACT,
-    "html_tables": SQL_HTML_TABLES,
-    "html_table_census": SQL_HTML_TABLE_CENSUS,
-    "stream_html_extract": SQL_STREAM_HTML_EXTRACT,
-    "html_c4_gate": SQL_HTML_C4_GATE,
-    "web_curation_funnel": SQL_WEB_CURATION_FUNNEL,
-    "domain_rollup": SQL_DOMAIN_ROLLUP,
-    "cluster_mix": SQL_CLUSTER_MIX,
-    "cluster_profile": SQL_CLUSTER_PROFILE,
-    "quality_calibration": SQL_QUALITY_CALIBRATION,
-    "lsh_recall": SQL_LSH_RECALL,
-    "langid_confusion": SQL_LANGID_CONFUSION,
-    "ngram_repetition": SQL_NGRAM_REPETITION,
-    "repetition_filter": SQL_REPETITION_FILTER,
-    "source_kl": SQL_SOURCE_KL,
-    "vocab_coverage": SQL_VOCAB_COVERAGE,
-    "zipf_fit": SQL_ZIPF_FIT,
-    "pack_efficiency": SQL_PACK_EFFICIENCY,
-    "quality_ece": SQL_QUALITY_ECE,
-    "hard_negatives": SQL_HARD_NEGATIVES,
-    "containment_pairs": SQL_CONTAINMENT_PAIRS,
-    "near_dup_rewrite": SQL_NEAR_DUP_REWRITE,
-    "near_dup_rewrite_best": SQL_NEAR_DUP_REWRITE_BEST,
-    "boilerplate_report": SQL_BOILERPLATE_REPORT,
-    "line_repetition": SQL_LINE_REPETITION,
-    "token_budget": SQL_TOKEN_BUDGET,
-    "curation_funnel": SQL_CURATION_FUNNEL,
-    "signal_correlation": SQL_SIGNAL_CORRELATION,
-    "embedding_audit": SQL_EMBEDDING_AUDIT,
-    "source_overlap": SQL_SOURCE_OVERLAP,
-    "normalize_text": SQL_NORMALIZE_TEXT,
-    "rag_retrieve": SQL_RAG_RETRIEVE,
-    "embed_standardize": SQL_EMBED_STANDARDIZE,
-    "stream_dsir": SQL_DSIR_WEIGHTS,
-    "ann_ivfpq_topk": SQL_ANN_IVFPQ_TOPK,
-    "image_stats_jpeg_mixed": SQL_IMAGE_STATS_JPEG,
-    "media_decode_audit": SQL_MEDIA_DECODE_AUDIT,
-    "minhash_lsh_pairs": SQL_MINHASH_LSH_PAIRS,
-    "incremental_near_dup": SQL_INCREMENTAL_NEAR_DUP,
-    "chunk_docs": SQL_CHUNK_DOCS,
-    "redact_docs": SQL_REDACT_DOCS,
-    "sample_docs": SQL_SAMPLE_DOCS,
-    "pack_sequences": SQL_PACK_SEQUENCES,
-    "pack_bins": SQL_PACK_BINS,
-    "semantic_pack": SQL_SEMANTIC_PACK,
-    "semantic_pack_stats": SQL_SEMANTIC_PACK_STATS,
-    "prep_corpus": SQL_PREP_CORPUS,
-    "shuffle_shard": SQL_SHUFFLE_SHARD,
-    "training_batches": SQL_TRAINING_BATCHES,
-    "simhash_pairs": SQL_SIMHASH_PAIRS,
-    "ngram_jaccard": SQL_NGRAM_JACCARD,
-    "set_similarity_exact": SQL_SET_SIMILARITY_EXACT,
-    "decontaminate": SQL_DECONTAMINATE,
-    "lang_id": SQL_LANG_ID,
-    "quality_score": SQL_QUALITY_SCORE,
-    "token_counts": SQL_TOKEN_COUNTS,
-    "fingerprints": SQL_FINGERPRINTS,
-    "ann_lsh_topk": SQL_ANN_LSH_TOPK,
-    "ann_ivf_topk": SQL_ANN_IVF_TOPK,
-    "ann_recall": SQL_ANN_RECALL,
-    "ann_ivf_trained": SQL_ANN_IVF_TRAINED,
-    "embed_near_dup": SQL_EMBED_NEAR_DUP,
-    "asof_last_click": SQL_ASOF_LAST_CLICK,
-    "asof_next_view": SQL_ASOF_NEXT_VIEW,
-    "user_sessions": SQL_USER_SESSIONS,
-    "session_errors": SQL_SESSION_ERRORS,
-    "props_extract": SQL_PROPS_EXTRACT,
-    "clean_corpus": SQL_CLEAN_CORPUS,
-    "media_stats": SQL_MEDIA_STATS,
-    "audio_stats": SQL_AUDIO_STATS,
-    "audio_stats_wav": SQL_AUDIO_STATS_WAV,
-    "image_stats_ppm": SQL_IMAGE_STATS_PPM,
-    "video_frames": SQL_VIDEO_FRAMES,
-    "scene_cuts": SQL_SCENE_CUTS,
-    "audio_silence": SQL_AUDIO_SILENCE,
-    "stream_candles": SQL_STREAM_CANDLES,
-    "stream_sessions": SQL_STREAM_SESSIONS,
-    "stream_dedupe": SQL_STREAM_DEDUPE,
-    "incremental_substring_dedup": SQL_INCREMENTAL_SUBSTRING_DEDUP,
-    "stream_substring_dedup": SQL_STREAM_SUBSTRING_DEDUP,
-    "linear_probe": SQL_LINEAR_PROBE,
-    "audio_spectrum": SQL_AUDIO_SPECTRUM,
-    "bpe_encode_corpus": SQL_BPE_ENCODE,
-    "image_phash": SQL_IMAGE_PHASH,
-    "audio_fingerprint": SQL_AUDIO_FINGERPRINT,
-    "video_fingerprint": SQL_VIDEO_FINGERPRINT,
-    "char_entropy": SQL_CHAR_ENTROPY,
-    "video_near_dup": SQL_VIDEO_NEAR_DUP,
-    "audio_near_dup": SQL_AUDIO_NEAR_DUP,
-    "hamming_near_dup_200k": SQL_HAMMING_NEAR_DUP_200K,
-    "phash_near_dup": SQL_PHASH_NEAR_DUP,
-    "pq_topk": SQL_PQ_TOPK,
-    "video_frames_avi": SQL_VIDEO_FRAMES_AVI,
-    "scene_cuts_avi": SQL_SCENE_CUTS_REAL,
-    "image_stats_jpeg_color": SQL_IMAGE_STATS_JPEG_COLOR,
-    "decontaminate_spans": SQL_DECONTAMINATE_SPANS,
-    "image_stats_jpeg": SQL_IMAGE_STATS_JPEG,
-    "video_frames_real": SQL_VIDEO_FRAMES_REAL,
-    "scene_cuts_real": SQL_SCENE_CUTS_REAL,
-    "substring_dedup": SQL_SUBSTRING_DEDUP,
-    "suffix_dup_spans": SQL_SUFFIX_DUP_SPANS,
-    "substring_dedup_recall": SQL_SUBSTRING_DEDUP_RECALL,
-    "substring_dedup_clean": SQL_SUBSTRING_DEDUP_CLEAN,
-    "weighted_sample": SQL_WEIGHTED_SAMPLE,
-    "temperature_mix": SQL_TEMPERATURE_MIX,
-    "negative_pairs": SQL_NEGATIVE_PAIRS,
-    "domain_cap": SQL_DOMAIN_CAP,
-    "hash_split": SQL_HASH_SPLIT,
-    "stream_trending": SQL_STREAM_TRENDING,
-    "stream_near_dup": SQL_STREAM_NEAR_DUP,
-    "stream_gaps": SQL_STREAM_GAPS,
-    "stream_view_click": SQL_STREAM_VIEW_CLICK,
-    "stream_enrich": SQL_STREAM_ENRICH,
-    "near_dup_clusters": SQL_NEAR_DUP_CLUSTERS,
-    "near_dup_clusters_star": SQL_NEAR_DUP_CLUSTERS,
-    "repetition_stats": SQL_REPETITION_STATS,
-    "unigram_logprob": SQL_UNIGRAM_LOGPROB,
-    "doremi_weights": SQL_DOREMI_WEIGHTS,
-    "doremi_mix_apply": SQL_DOREMI_MIX_APPLY,
-    "corpus_build_e2e": SQL_CORPUS_BUILD_E2E,
-    "warc_extract": SQL_WARC_EXTRACT,
-    "stream_warc_extract": SQL_STREAM_WARC_EXTRACT,
-    "warc_curation_funnel": SQL_WARC_CURATION_FUNNEL,
-    "corpus_build_e2e_warc": SQL_CORPUS_BUILD_E2E_WARC,
-    "encoding_audit": SQL_ENCODING_AUDIT,
-    "unicode_audit": SQL_UNICODE_AUDIT,
-    "unicode_normalize": SQL_UNICODE_NORMALIZE,
-    "unicode_route": SQL_UNICODE_ROUTE,
-    "stream_encoding_audit": SQL_STREAM_ENCODING_AUDIT,
-    "pii_card_audit": SQL_PII_CARD_AUDIT,
-    "quality_psi": SQL_QUALITY_PSI,
-    "span_corruption": SQL_SPAN_CORRUPTION,
-    "clm_batches": SQL_CLM_BATCHES,
-    "source_census": SQL_SOURCE_CENSUS,
-    "ffd_batches": SQL_FFD_BATCHES,
-    "dedup_savings": SQL_DEDUP_SAVINGS,
-    "bpe_bytes_train": SQL_BPE_BYTES_TRAIN,
-    "bpe_bytes_encode": SQL_BPE_BYTES_ENCODE,
-    "tokenizer_oov_cost": SQL_TOKENIZER_OOV_COST,
-    "doremi_proxy_compare": SQL_DOREMI_PROXY_COMPARE,
-    "embed_quantize": SQL_EMBED_QUANTIZE,
-    "semdedup": SQL_SEMDEDUP,
-    "prototype_prune": SQL_PROTOTYPE_PRUNE,
-    "prototype_prune_census": SQL_PROTOTYPE_PRUNE_CENSUS,
-    "image_stats_png": SQL_IMAGE_STATS_PNG,
-    "pagerank": SQL_PAGERANK,
-    "domain_authority": SQL_DOMAIN_AUTHORITY,
-    "authority_sample": SQL_AUTHORITY_SAMPLE,
-    "frontier_rank": SQL_FRONTIER_RANK,
-    "link_resolve": SQL_LINK_RESOLVE,
-    "trustrank": SQL_TRUSTRANK,
-    "spam_mass": SQL_SPAM_MASS,
-    "trusted_sample": SQL_TRUSTED_SAMPLE,
-    "host_authority": SQL_HOST_AUTHORITY,
-    "host_census": SQL_HOST_CENSUS,
-    "pair_alignment": SQL_PAIR_ALIGNMENT,
-    "pair_align_census": SQL_PAIR_ALIGN_CENSUS,
-    "pair_hard_negatives": SQL_PAIR_HARD_NEGATIVES,
-    "sitemap_extract": SQL_SITEMAP_EXTRACT,
-    "sitemap_index_extract": SQL_SITEMAP_INDEX_EXTRACT,
-    "frontier_merge": SQL_FRONTIER_MERGE,
-    "recrawl_priority": SQL_RECRAWL_PRIORITY,
-    "soft404_audit": SQL_SOFT404_AUDIT,
-    "ai_optout_audit": SQL_AI_OPTOUT_AUDIT,
-    "curation_ledger": SQL_CURATION_LEDGER,
-    "license_census": SQL_LICENSE_CENSUS,
-    "crawl_maintain_e2e": SQL_CRAWL_MAINTAIN_E2E,
-    "hreflang_extract": SQL_HREFLANG_EXTRACT,
-    "hreflang_census": SQL_HREFLANG_CENSUS,
-    "revisit_census": SQL_REVISIT_CENSUS,
-    "stream_index_gate": SQL_STREAM_INDEX_GATE,
-    "meta_robots_audit": SQL_META_ROBOTS_AUDIT,
-    "canonical_collapse": SQL_CANONICAL_COLLAPSE,
-    "index_gate": SQL_INDEX_GATE,
-    "edge_gate_census": SQL_EDGE_GATE_CENSUS,
-    "redirect_resolve": SQL_REDIRECT_RESOLVE,
-    "robots_gate": SQL_ROBOTS_GATE,
-    "frontier_schedule": SQL_FRONTIER_SCHEDULE,
-    "crawl_funnel": SQL_CRAWL_FUNNEL,
-    "table_qa_samples": SQL_TABLE_QA_SAMPLES,
-    "link_extract": SQL_LINK_EXTRACT,
-    "stream_link_extract": SQL_STREAM_LINK_EXTRACT,
-    "anchor_texts": SQL_ANCHOR_TEXTS,
-    "anchor_text_census": SQL_ANCHOR_TEXT_CENSUS,
-    "outlink_census": SQL_OUTLINK_CENSUS,
-    "cross_doc_repetition": SQL_CROSS_DOC_REPETITION,
-    "bpe_train": SQL_BPE_TRAIN,
-    "script_census": SQL_SCRIPT_CENSUS,
-    "code_detect": SQL_CODE_DETECT,
-    "fim_samples": SQL_FIM_SAMPLES,
-    "stream_fim_samples": SQL_STREAM_FIM_SAMPLES,
-    "ngram_novelty": SQL_NGRAM_NOVELTY,
-    "curation_route": SQL_CURATION_ROUTE,
-    "stream_curation_route": SQL_STREAM_CURATION_ROUTE,
-    "bitext_mine": SQL_BITEXT_MINE,
-    "bitext_mine_ivf": SQL_BITEXT_MINE_IVF,
-    "bitext_recall": SQL_BITEXT_RECALL,
-    "source_route_census": SQL_SOURCE_ROUTE_CENSUS,
-    "mixture_waterfill": SQL_MIXTURE_WATERFILL,
-    "anneal_schedule": SQL_ANNEAL_SCHEDULE,
-    "domain_quality_prior": SQL_DOMAIN_QUALITY_PRIOR,
-    "jl_project": SQL_JL_PROJECT,
-    "jl_distortion": SQL_JL_DISTORTION,
-    "sft_render": SQL_SFT_RENDER,
-    "sft_loss_mask": SQL_SFT_LOSS_MASK,
-    "template_dedup_audit": SQL_TEMPLATE_DEDUP_AUDIT,
-    "sft_pack": SQL_SFT_PACK,
-    "stream_sft_render": SQL_STREAM_SFT_RENDER,
-    "pref_pairs": SQL_PREF_PAIRS,
-    "pref_length_bias": SQL_PREF_LENGTH_BIAS,
-    "bt_ratings": SQL_BT_RATINGS,
-    "bt_length_effect": SQL_BT_LENGTH_EFFECT,
-    "best_of_n_gain": SQL_BEST_OF_N_GAIN,
-    "epoch_schedule": SQL_EPOCH_SCHEDULE,
-    "lsh_tradeoff": SQL_LSH_TRADEOFF,
+#: name -> (Spark plan, DuckDB oracle SQL); plans/queries.py merges it into ``REGISTRY``.
+REGISTRY_TD: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]] = {
+    "unigram_train": (q_unigram_train, SQL_UNIGRAM_TRAIN),
+    "unigram_segment": (q_unigram_segment, SQL_UNIGRAM_SEGMENT),
+    "unigram_train_pruned": (q_unigram_train_pruned, SQL_UNIGRAM_TRAIN_PRUNED),
+    "wordpiece_train": (q_wordpiece_train, SQL_WORDPIECE_TRAIN),
+    "wordpiece_encode_corpus": (q_wordpiece_encode_corpus, SQL_WORDPIECE_ENCODE_CORPUS),
+    "tokenizer_efficiency": (q_tokenizer_efficiency, SQL_TOKENIZER_EFFICIENCY),
+    "line_dedup": (q_line_dedup, SQL_LINE_DEDUP),
+    "line_dedup_keep_first": (q_line_dedup_keep_first, SQL_LINE_DEDUP_KEEP_FIRST),
+    "incremental_line_dedup": (q_incremental_line_dedup, SQL_INCREMENTAL_LINE_DEDUP),
+    "embedding_covariance": (q_embedding_covariance, SQL_EMBEDDING_COVARIANCE),
+    "pca_top_component": (q_pca_top_component, SQL_PCA_TOP_COMPONENT),
+    "pca_project": (q_pca_project, SQL_PCA_PROJECT),
+    "stream_quality_filter": (q_stream_quality_filter, SQL_STREAM_QUALITY_FILTER),
+    "pca_reduce2": (q_pca_reduce2, SQL_PCA_REDUCE2),
+    "pca_outliers": (q_pca_outliers, SQL_PCA_OUTLIERS),
+    "dsir_weights": (q_dsir_weights, SQL_DSIR_WEIGHTS),
+    "dsir_select": (q_dsir_select, SQL_DSIR_SELECT),
+    "c4_clean": (q_c4_clean, SQL_C4_CLEAN),
+    "gopher_quality": (q_gopher_quality, SQL_GOPHER_QUALITY),
+    "kn_bigram_lm": (q_kn_bigram_lm, SQL_KN_BIGRAM_LM),
+    "kn_perplexity": (q_kn_perplexity, SQL_KN_PERPLEXITY),
+    "ccnet_buckets": (q_ccnet_buckets, SQL_CCNET_BUCKETS),
+    "probe_auc": (q_probe_auc, SQL_PROBE_AUC),
+    "fasttext_probe": (q_fasttext_probe, SQL_FASTTEXT_PROBE),
+    "fasttext_auc": (q_fasttext_auc, SQL_FASTTEXT_AUC),
+    "fasttext_select": (q_fasttext_select, SQL_FASTTEXT_SELECT),
+    "stream_fasttext_score": (q_stream_fasttext_score, SQL_STREAM_FASTTEXT_SCORE),
+    "domain_filter": (q_domain_filter, SQL_DOMAIN_FILTER),
+    "url_canonicalize": (q_url_canonicalize, SQL_URL_CANONICALIZE),
+    "url_dedup": (q_url_dedup, SQL_URL_DEDUP),
+    "stream_url_dedup": (q_stream_url_dedup, SQL_URL_DEDUP),
+    "stream_url_dedup_append": (q_stream_url_dedup_append, SQL_STREAM_URL_DEDUP_APPEND),
+    "stream_domain_filter": (q_stream_domain_filter, SQL_STREAM_DOMAIN_FILTER),
+    "html_extract": (q_html_extract, SQL_HTML_EXTRACT),
+    "html_tables": (q_html_tables, SQL_HTML_TABLES),
+    "html_table_census": (q_html_table_census, SQL_HTML_TABLE_CENSUS),
+    "stream_html_extract": (q_stream_html_extract, SQL_STREAM_HTML_EXTRACT),
+    "html_c4_gate": (q_html_c4_gate, SQL_HTML_C4_GATE),
+    "web_curation_funnel": (q_web_curation_funnel, SQL_WEB_CURATION_FUNNEL),
+    "domain_rollup": (q_domain_rollup, SQL_DOMAIN_ROLLUP),
+    "cluster_mix": (q_cluster_mix, SQL_CLUSTER_MIX),
+    "cluster_profile": (q_cluster_profile, SQL_CLUSTER_PROFILE),
+    "quality_calibration": (q_quality_calibration, SQL_QUALITY_CALIBRATION),
+    "lsh_recall": (q_lsh_recall, SQL_LSH_RECALL),
+    "langid_confusion": (q_langid_confusion, SQL_LANGID_CONFUSION),
+    "ngram_repetition": (q_ngram_repetition, SQL_NGRAM_REPETITION),
+    "repetition_filter": (q_repetition_filter, SQL_REPETITION_FILTER),
+    "source_kl": (q_source_kl, SQL_SOURCE_KL),
+    "vocab_coverage": (q_vocab_coverage, SQL_VOCAB_COVERAGE),
+    "zipf_fit": (q_zipf_fit, SQL_ZIPF_FIT),
+    "pack_efficiency": (q_pack_efficiency, SQL_PACK_EFFICIENCY),
+    "quality_ece": (q_quality_ece, SQL_QUALITY_ECE),
+    "hard_negatives": (q_hard_negatives, SQL_HARD_NEGATIVES),
+    "containment_pairs": (q_containment_pairs, SQL_CONTAINMENT_PAIRS),
+    "near_dup_rewrite": (q_near_dup_rewrite, SQL_NEAR_DUP_REWRITE),
+    "near_dup_rewrite_best": (q_near_dup_rewrite_best, SQL_NEAR_DUP_REWRITE_BEST),
+    "boilerplate_report": (q_boilerplate_report, SQL_BOILERPLATE_REPORT),
+    "line_repetition": (q_line_repetition, SQL_LINE_REPETITION),
+    "token_budget": (q_token_budget, SQL_TOKEN_BUDGET),
+    "curation_funnel": (q_curation_funnel, SQL_CURATION_FUNNEL),
+    "signal_correlation": (q_signal_correlation, SQL_SIGNAL_CORRELATION),
+    "embedding_audit": (q_embedding_audit, SQL_EMBEDDING_AUDIT),
+    "source_overlap": (q_source_overlap, SQL_SOURCE_OVERLAP),
+    "normalize_text": (q_normalize_text, SQL_NORMALIZE_TEXT),
+    "rag_retrieve": (q_rag_retrieve, SQL_RAG_RETRIEVE),
+    "embed_standardize": (q_embed_standardize, SQL_EMBED_STANDARDIZE),
+    "stream_dsir": (q_stream_dsir, SQL_DSIR_WEIGHTS),
+    "ann_ivfpq_topk": (q_ann_ivfpq_topk, SQL_ANN_IVFPQ_TOPK),
+    "image_stats_jpeg_mixed": (q_image_stats_jpeg_mixed, SQL_IMAGE_STATS_JPEG),
+    "media_decode_audit": (q_media_decode_audit, SQL_MEDIA_DECODE_AUDIT),
+    "char_entropy": (q_char_entropy, SQL_CHAR_ENTROPY),
+    "video_fingerprint": (q_video_fingerprint, SQL_VIDEO_FINGERPRINT),
+    "video_near_dup": (q_video_near_dup, SQL_VIDEO_NEAR_DUP),
+    "audio_fingerprint": (q_audio_fingerprint, SQL_AUDIO_FINGERPRINT),
+    "audio_near_dup": (q_audio_near_dup, SQL_AUDIO_NEAR_DUP),
+    "hamming_near_dup_200k": (q_hamming_near_dup_200k, SQL_HAMMING_NEAR_DUP_200K),
+    "image_phash": (q_image_phash, SQL_IMAGE_PHASH),
+    "phash_near_dup": (q_phash_near_dup, SQL_PHASH_NEAR_DUP),
+    "bpe_encode_corpus": (q_bpe_encode, SQL_BPE_ENCODE),
+    "audio_spectrum": (q_audio_spectrum, SQL_AUDIO_SPECTRUM),
+    "linear_probe": (q_linear_probe, SQL_LINEAR_PROBE),
+    "stream_substring_dedup": (q_stream_substring_dedup, SQL_STREAM_SUBSTRING_DEDUP),
+    "incremental_substring_dedup": (q_incremental_substring_dedup, SQL_INCREMENTAL_SUBSTRING_DEDUP),
+    "pq_topk": (q_pq_topk, SQL_PQ_TOPK),
+    "video_frames_avi": (q_video_frames_avi, SQL_VIDEO_FRAMES_AVI),
+    "scene_cuts_avi": (q_scene_cuts_avi, SQL_SCENE_CUTS_REAL),
+    "image_stats_jpeg_color": (q_image_stats_jpeg_color, SQL_IMAGE_STATS_JPEG_COLOR),
+    "decontaminate_spans": (q_decontaminate_spans, SQL_DECONTAMINATE_SPANS),
+    "image_stats_jpeg": (q_image_stats_jpeg, SQL_IMAGE_STATS_JPEG),
+    "video_frames_real": (q_video_frames_real, SQL_VIDEO_FRAMES_REAL),
+    "scene_cuts_real": (q_scene_cuts_real, SQL_SCENE_CUTS_REAL),
+    "substring_dedup": (q_substring_dedup, SQL_SUBSTRING_DEDUP),
+    "suffix_dup_spans": (q_suffix_dup_spans, SQL_SUFFIX_DUP_SPANS),
+    "substring_dedup_recall": (q_substring_dedup_recall, SQL_SUBSTRING_DEDUP_RECALL),
+    "substring_dedup_clean": (q_substring_dedup_clean, SQL_SUBSTRING_DEDUP_CLEAN),
+    "minhash_lsh_pairs": (q_minhash_lsh_pairs, SQL_MINHASH_LSH_PAIRS),
+    "incremental_near_dup": (q_incremental_near_dup, SQL_INCREMENTAL_NEAR_DUP),
+    "chunk_docs": (q_chunk_docs, SQL_CHUNK_DOCS),
+    "redact_docs": (q_redact_docs, SQL_REDACT_DOCS),
+    "sample_docs": (q_sample_docs, SQL_SAMPLE_DOCS),
+    "pack_sequences": (q_pack_sequences, SQL_PACK_SEQUENCES),
+    "pack_bins": (q_pack_bins, SQL_PACK_BINS),
+    "semantic_pack": (q_semantic_pack, SQL_SEMANTIC_PACK),
+    "semantic_pack_stats": (q_semantic_pack_stats, SQL_SEMANTIC_PACK_STATS),
+    "prep_corpus": (q_prep_corpus, SQL_PREP_CORPUS),
+    "shuffle_shard": (q_shuffle_shard, SQL_SHUFFLE_SHARD),
+    "training_batches": (q_training_batches, SQL_TRAINING_BATCHES),
+    "simhash_pairs": (q_simhash_pairs, SQL_SIMHASH_PAIRS),
+    "ngram_jaccard": (q_ngram_jaccard, SQL_NGRAM_JACCARD),
+    "set_similarity_exact": (q_set_similarity_exact, SQL_SET_SIMILARITY_EXACT),
+    "decontaminate": (q_decontaminate, SQL_DECONTAMINATE),
+    "lang_id": (q_lang_id, SQL_LANG_ID),
+    "quality_score": (q_quality_score, SQL_QUALITY_SCORE),
+    "token_counts": (q_token_counts, SQL_TOKEN_COUNTS),
+    "fingerprints": (q_fingerprints, SQL_FINGERPRINTS),
+    "ann_lsh_topk": (q_ann_lsh_topk, SQL_ANN_LSH_TOPK),
+    "ann_ivf_topk": (q_ann_ivf_topk, SQL_ANN_IVF_TOPK),
+    "ann_recall": (q_ann_recall, SQL_ANN_RECALL),
+    "ann_ivf_trained": (q_ann_ivf_trained, SQL_ANN_IVF_TRAINED),
+    "embed_near_dup": (q_embed_near_dup, SQL_EMBED_NEAR_DUP),
+    "asof_last_click": (q_asof_last_click, SQL_ASOF_LAST_CLICK),
+    "asof_next_view": (q_asof_next_view, SQL_ASOF_NEXT_VIEW),
+    "user_sessions": (q_user_sessions, SQL_USER_SESSIONS),
+    "session_errors": (q_session_errors, SQL_SESSION_ERRORS),
+    "props_extract": (q_props_extract, SQL_PROPS_EXTRACT),
+    "clean_corpus": (q_clean_corpus, SQL_CLEAN_CORPUS),
+    "media_stats": (q_media_stats, SQL_MEDIA_STATS),
+    "audio_stats": (q_audio_stats, SQL_AUDIO_STATS),
+    "audio_stats_wav": (q_audio_stats_wav, SQL_AUDIO_STATS_WAV),
+    "image_stats_ppm": (q_image_stats_ppm, SQL_IMAGE_STATS_PPM),
+    "video_frames": (q_video_frames, SQL_VIDEO_FRAMES),
+    "scene_cuts": (q_scene_cuts, SQL_SCENE_CUTS),
+    "audio_silence": (q_audio_silence, SQL_AUDIO_SILENCE),
+    "stream_candles": (q_stream_candles, SQL_STREAM_CANDLES),
+    "stream_sessions": (q_stream_sessions, SQL_STREAM_SESSIONS),
+    "stream_dedupe": (q_stream_dedupe, SQL_STREAM_DEDUPE),
+    "weighted_sample": (q_weighted_sample, SQL_WEIGHTED_SAMPLE),
+    "temperature_mix": (q_temperature_mix, SQL_TEMPERATURE_MIX),
+    "negative_pairs": (q_negative_pairs, SQL_NEGATIVE_PAIRS),
+    "domain_cap": (q_domain_cap, SQL_DOMAIN_CAP),
+    "hash_split": (q_hash_split, SQL_HASH_SPLIT),
+    "stream_trending": (q_stream_trending, SQL_STREAM_TRENDING),
+    "stream_near_dup": (q_stream_near_dup, SQL_STREAM_NEAR_DUP),
+    "stream_gaps": (q_stream_gaps, SQL_STREAM_GAPS),
+    "stream_view_click": (q_stream_view_click, SQL_STREAM_VIEW_CLICK),
+    "stream_enrich": (q_stream_enrich, SQL_STREAM_ENRICH),
+    "near_dup_clusters": (q_near_dup_clusters, SQL_NEAR_DUP_CLUSTERS),
+    "near_dup_clusters_star": (q_near_dup_clusters_star, SQL_NEAR_DUP_CLUSTERS),
+    "repetition_stats": (q_repetition_stats, SQL_REPETITION_STATS),
+    "unigram_logprob": (q_unigram_logprob, SQL_UNIGRAM_LOGPROB),
+    "doremi_weights": (q_doremi_weights, SQL_DOREMI_WEIGHTS),
+    "doremi_mix_apply": (q_doremi_mix_apply, SQL_DOREMI_MIX_APPLY),
+    "corpus_build_e2e": (q_corpus_build_e2e, SQL_CORPUS_BUILD_E2E),
+    "warc_extract": (q_warc_extract, SQL_WARC_EXTRACT),
+    "stream_warc_extract": (q_stream_warc_extract, SQL_STREAM_WARC_EXTRACT),
+    "warc_curation_funnel": (q_warc_curation_funnel, SQL_WARC_CURATION_FUNNEL),
+    "corpus_build_e2e_warc": (q_corpus_build_e2e_warc, SQL_CORPUS_BUILD_E2E_WARC),
+    "encoding_audit": (q_encoding_audit, SQL_ENCODING_AUDIT),
+    "stream_encoding_audit": (q_stream_encoding_audit, SQL_STREAM_ENCODING_AUDIT),
+    "unicode_audit": (q_unicode_audit, SQL_UNICODE_AUDIT),
+    "unicode_normalize": (q_unicode_normalize, SQL_UNICODE_NORMALIZE),
+    "unicode_route": (q_unicode_route, SQL_UNICODE_ROUTE),
+    "pii_card_audit": (q_pii_card_audit, SQL_PII_CARD_AUDIT),
+    "quality_psi": (q_quality_psi, SQL_QUALITY_PSI),
+    "span_corruption": (q_span_corruption, SQL_SPAN_CORRUPTION),
+    "clm_batches": (q_clm_batches, SQL_CLM_BATCHES),
+    "source_census": (q_source_census, SQL_SOURCE_CENSUS),
+    "ffd_batches": (q_ffd_batches, SQL_FFD_BATCHES),
+    "dedup_savings": (q_dedup_savings, SQL_DEDUP_SAVINGS),
+    "bpe_bytes_train": (q_bpe_bytes_train, SQL_BPE_BYTES_TRAIN),
+    "bpe_bytes_encode": (q_bpe_bytes_encode, SQL_BPE_BYTES_ENCODE),
+    "tokenizer_oov_cost": (q_tokenizer_oov_cost, SQL_TOKENIZER_OOV_COST),
+    "doremi_proxy_compare": (q_doremi_proxy_compare, SQL_DOREMI_PROXY_COMPARE),
+    "embed_quantize": (q_embed_quantize, SQL_EMBED_QUANTIZE),
+    "semdedup": (q_semdedup, SQL_SEMDEDUP),
+    "prototype_prune": (q_prototype_prune, SQL_PROTOTYPE_PRUNE),
+    "prototype_prune_census": (q_prototype_prune_census, SQL_PROTOTYPE_PRUNE_CENSUS),
+    "image_stats_png": (q_image_stats_png, SQL_IMAGE_STATS_PNG),
+    "pagerank": (q_pagerank, SQL_PAGERANK),
+    "domain_authority": (q_domain_authority, SQL_DOMAIN_AUTHORITY),
+    "authority_sample": (q_authority_sample, SQL_AUTHORITY_SAMPLE),
+    "frontier_rank": (q_frontier_rank, SQL_FRONTIER_RANK),
+    "link_resolve": (q_link_resolve, SQL_LINK_RESOLVE),
+    "trustrank": (q_trustrank, SQL_TRUSTRANK),
+    "spam_mass": (q_spam_mass, SQL_SPAM_MASS),
+    "trusted_sample": (q_trusted_sample, SQL_TRUSTED_SAMPLE),
+    "host_authority": (q_host_authority, SQL_HOST_AUTHORITY),
+    "host_census": (q_host_census, SQL_HOST_CENSUS),
+    "pair_alignment": (q_pair_alignment, SQL_PAIR_ALIGNMENT),
+    "pair_align_census": (q_pair_align_census, SQL_PAIR_ALIGN_CENSUS),
+    "pair_hard_negatives": (q_pair_hard_negatives, SQL_PAIR_HARD_NEGATIVES),
+    "sitemap_extract": (q_sitemap_extract, SQL_SITEMAP_EXTRACT),
+    "sitemap_index_extract": (q_sitemap_index_extract, SQL_SITEMAP_INDEX_EXTRACT),
+    "frontier_merge": (q_frontier_merge, SQL_FRONTIER_MERGE),
+    "recrawl_priority": (q_recrawl_priority, SQL_RECRAWL_PRIORITY),
+    "soft404_audit": (q_soft404_audit, SQL_SOFT404_AUDIT),
+    "ai_optout_audit": (q_ai_optout_audit, SQL_AI_OPTOUT_AUDIT),
+    "curation_ledger": (q_curation_ledger, SQL_CURATION_LEDGER),
+    "license_census": (q_license_census, SQL_LICENSE_CENSUS),
+    "crawl_maintain_e2e": (q_crawl_maintain_e2e, SQL_CRAWL_MAINTAIN_E2E),
+    "hreflang_extract": (q_hreflang_extract, SQL_HREFLANG_EXTRACT),
+    "hreflang_census": (q_hreflang_census, SQL_HREFLANG_CENSUS),
+    "revisit_census": (q_revisit_census, SQL_REVISIT_CENSUS),
+    "stream_index_gate": (q_stream_index_gate, SQL_STREAM_INDEX_GATE),
+    "meta_robots_audit": (q_meta_robots_audit, SQL_META_ROBOTS_AUDIT),
+    "canonical_collapse": (q_canonical_collapse, SQL_CANONICAL_COLLAPSE),
+    "index_gate": (q_index_gate, SQL_INDEX_GATE),
+    "edge_gate_census": (q_edge_gate_census, SQL_EDGE_GATE_CENSUS),
+    "redirect_resolve": (q_redirect_resolve, SQL_REDIRECT_RESOLVE),
+    "robots_gate": (q_robots_gate, SQL_ROBOTS_GATE),
+    "frontier_schedule": (q_frontier_schedule, SQL_FRONTIER_SCHEDULE),
+    "crawl_funnel": (q_crawl_funnel, SQL_CRAWL_FUNNEL),
+    "table_qa_samples": (q_table_qa_samples, SQL_TABLE_QA_SAMPLES),
+    "link_extract": (q_link_extract, SQL_LINK_EXTRACT),
+    "stream_link_extract": (q_stream_link_extract, SQL_STREAM_LINK_EXTRACT),
+    "anchor_texts": (q_anchor_texts, SQL_ANCHOR_TEXTS),
+    "anchor_text_census": (q_anchor_text_census, SQL_ANCHOR_TEXT_CENSUS),
+    "outlink_census": (q_outlink_census, SQL_OUTLINK_CENSUS),
+    "cross_doc_repetition": (q_cross_doc_repetition, SQL_CROSS_DOC_REPETITION),
+    "bpe_train": (q_bpe_train, SQL_BPE_TRAIN),
+    "script_census": (q_script_census, SQL_SCRIPT_CENSUS),
+    "code_detect": (q_code_detect, SQL_CODE_DETECT),
+    "fim_samples": (q_fim_samples, SQL_FIM_SAMPLES),
+    "stream_fim_samples": (q_stream_fim_samples, SQL_STREAM_FIM_SAMPLES),
+    "ngram_novelty": (q_ngram_novelty, SQL_NGRAM_NOVELTY),
+    "curation_route": (q_curation_route, SQL_CURATION_ROUTE),
+    "stream_curation_route": (q_stream_curation_route, SQL_STREAM_CURATION_ROUTE),
+    "bitext_mine": (q_bitext_mine, SQL_BITEXT_MINE),
+    "bitext_mine_ivf": (q_bitext_mine_ivf, SQL_BITEXT_MINE_IVF),
+    "bitext_recall": (q_bitext_recall, SQL_BITEXT_RECALL),
+    "source_route_census": (q_source_route_census, SQL_SOURCE_ROUTE_CENSUS),
+    "mixture_waterfill": (q_mixture_waterfill, SQL_MIXTURE_WATERFILL),
+    "anneal_schedule": (q_anneal_schedule, SQL_ANNEAL_SCHEDULE),
+    "domain_quality_prior": (q_domain_quality_prior, SQL_DOMAIN_QUALITY_PRIOR),
+    "jl_project": (q_jl_project, SQL_JL_PROJECT),
+    "jl_distortion": (q_jl_distortion, SQL_JL_DISTORTION),
+    "sft_render": (q_sft_render, SQL_SFT_RENDER),
+    "sft_loss_mask": (q_sft_loss_mask, SQL_SFT_LOSS_MASK),
+    "template_dedup_audit": (q_template_dedup_audit, SQL_TEMPLATE_DEDUP_AUDIT),
+    "sft_pack": (q_sft_pack, SQL_SFT_PACK),
+    "stream_sft_render": (q_stream_sft_render, SQL_STREAM_SFT_RENDER),
+    "pref_pairs": (q_pref_pairs, SQL_PREF_PAIRS),
+    "pref_length_bias": (q_pref_length_bias, SQL_PREF_LENGTH_BIAS),
+    "bt_ratings": (q_bt_ratings, SQL_BT_RATINGS),
+    "bt_length_effect": (q_bt_length_effect, SQL_BT_LENGTH_EFFECT),
+    "best_of_n_gain": (q_best_of_n_gain, SQL_BEST_OF_N_GAIN),
+    "epoch_schedule": (q_epoch_schedule, SQL_EPOCH_SCHEDULE),
+    "lsh_tradeoff": (q_lsh_tradeoff, SQL_LSH_TRADEOFF),
 }
